@@ -166,6 +166,96 @@ class TestBloomAdmission:
         assert _ids(got) == _ids(_admit_expected(corpus, batch))
 
 
+@pytest.fixture
+def broadcast_threshold(spark):
+    """Setter for spark.sql.autoBroadcastJoinThreshold, restored after
+    the test."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    yield lambda v: spark.conf.set(key, str(v))
+    spark.conf.set(key, old)
+
+
+def _parquet_docs(spark, tmp_path, name, rows):
+    """Docs read back from parquet: Catalyst then knows their size,
+    which frames built from Python rows do not."""
+    path = str(tmp_path / name)
+    _docs(spark, rows).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _rows(df):
+    return sorted(((r.doc_id, r.text) for r in df.collect()), key=str)
+
+
+class TestDirectAdmission:
+    """bloom_admission takes one broadcast anti-join while the corpus is
+    under the broadcast threshold; both plans must admit the same rows."""
+
+    def _fixture(self, spark, tmp_path):
+        corpus = _parquet_docs(
+            spark,
+            tmp_path,
+            "corpus",
+            [(i, f"body {i % 23}") for i in range(60)] + [(60, None), (61, "")],
+        )
+        batch = _parquet_docs(
+            spark,
+            tmp_path,
+            "batch",
+            [(100 + i, f"body {i % 31}") for i in range(40)]  # exact dups + new
+            + [(200, "fresh"), (201, "fresh"), (202, "body 5")]  # dup batch texts
+            + [(203, None), (204, None), (None, "fresh"), (205, "")],
+        )
+        return corpus, batch
+
+    def test_direct_equals_bloom(self, spark, tmp_path, broadcast_threshold):
+        corpus, batch = self._fixture(spark, tmp_path)
+        assert dedup_ops.admission_path(corpus, "text") == "direct"
+        direct = _rows(bloom_admission(corpus, batch, "doc_id", "text"))
+        broadcast_threshold(-1)
+        assert dedup_ops.admission_path(corpus, "text") == "bloom"
+        bloom = _rows(bloom_admission(corpus, batch, "doc_id", "text"))
+        assert direct == bloom
+        assert direct == _rows(_admit_expected(corpus, batch))
+        # NULL texts are always admitted; so is every copy of a new text
+        got = set(direct)
+        assert {(203, None), (204, None)} <= got
+        assert {(200, "fresh"), (201, "fresh"), (None, "fresh")} <= got
+        assert not any(t == "body 5" or t == "" for _, t in got)
+
+    def test_path_follows_threshold(self, spark, tmp_path, broadcast_threshold):
+        corpus, batch = self._fixture(spark, tmp_path)
+        size = int(
+            str(
+                corpus.select("text")._jdf.queryExecution()
+                .optimizedPlan().stats().sizeInBytes()
+            )
+        )
+        broadcast_threshold(size)
+        assert dedup_ops.admission_path(corpus, "text") == "direct"
+        direct = _rows(bloom_admission(corpus, batch, "doc_id", "text"))
+        broadcast_threshold(size - 1)
+        assert dedup_ops.admission_path(corpus, "text") == "bloom"
+        assert _rows(bloom_admission(corpus, batch, "doc_id", "text")) == direct
+        # a corpus Catalyst cannot size, or a prebuilt word table,
+        # always takes the bloom path
+        broadcast_threshold(64 << 20)
+        assert dedup_ops.admission_path(_docs(spark, [(0, "x")]), "text") == "bloom"
+        index = dedup_ops.build_bloom_index(corpus, "text")
+        assert dedup_ops.admission_path(corpus, "text", index) == "bloom"
+        assert _rows(bloom_admission(corpus, batch, "doc_id", "text", words=index)) == direct
+
+    def test_direct_plan_is_one_broadcast_anti_join(self, spark, tmp_path):
+        corpus, batch = self._fixture(spark, tmp_path)
+        plan = (
+            bloom_admission(corpus, batch, "doc_id", "text")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+        assert "xxhash64" not in plan
+
+
 class TestLeakageSafeSplit:
     def _clustered_assignment(self, spark, docs):
         """Per-doc split assignment exactly as split_leakage_safe

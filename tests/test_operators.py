@@ -1875,6 +1875,59 @@ def test_incremental_component_assign_bridges_clusters(spark):
     assert got[10] == got[21] == got[1] == 1
 
 
+def test_incremental_component_assign_driver_and_distributed_paths_agree(
+    spark, monkeypatch
+):
+    """Small bridging-batch variant of the slow recompute property: the
+    driver relabel (edge list within DRIVER_MAX_EDGES) and the
+    distributed components path (edge list over it) both equal the full
+    recompute — with a batch doc bridging two corpus clusters under a
+    smaller id, a batch-internal chain reaching a corpus cluster, a
+    corpus cluster touched without changing label, and a singleton."""
+    from voter_gateway_spark.operators.dedup_ops import incremental_component_assign
+
+    corpus_pairs = [(10, 11), (20, 21), (30, 31)]
+    corpus_ids = [10, 11, 20, 21, 30, 31, 40]
+    cmap = spark.createDataFrame(
+        [(10, 10), (11, 10), (20, 20), (21, 20), (30, 30), (31, 30), (40, 40)],
+        "id bigint, component bigint",
+    )
+    batch = [5, 50, 51, 52, 60, 70]
+    batch_ids = spark.createDataFrame([(i,) for i in batch + [50]], "id bigint")
+    bp_edges = [(5, 11), (5, 21), (52, 31), (60, 40), (60, 40)]
+    nn_edges = [(50, 51), (51, 52)]
+    bp = spark.createDataFrame(bp_edges, "new_id bigint, corpus_id bigint")
+    nn = spark.createDataFrame(nn_edges, "id_a bigint, id_b bigint")
+    exp = _full_map(
+        spark,
+        corpus_pairs + [(c, b) for b, c in bp_edges] + nn_edges,
+        corpus_ids + batch,
+    )
+    calls = []
+    real_cc = dedup_ops.connected_components
+
+    def spy(*a, **kw):
+        calls.append(kw.get("driver_max_edges"))
+        return real_cc(*a, **kw)
+
+    monkeypatch.setattr(dedup_ops, "connected_components", spy)
+
+    def run():
+        rows = incremental_component_assign(cmap, batch_ids, bp, nn).collect()
+        assert len(rows) == len(exp)  # one row per id
+        return {r.id: r.component for r in rows}
+
+    # 7 collected rows = 14 directed edges: exactly at the gate → driver
+    monkeypatch.setattr(dedup_ops, "DRIVER_MAX_EDGES", 14)
+    assert run() == exp
+    assert calls == []
+    # one directed edge under it → the distributed components path
+    monkeypatch.setattr(dedup_ops, "DRIVER_MAX_EDGES", 13)
+    assert run() == exp
+    assert calls == [0]
+    assert exp[10] == exp[21] == 5 and exp[52] == 30 and exp[60] == 40 and exp[70] == 70
+
+
 @settings(
     max_examples=6,
     deadline=None,

@@ -181,6 +181,49 @@ def test_widen_raises_narrow_inputs_only(spark):
     assert widen(wide) is wide
 
 
+def test_widen_decides_from_the_plan_without_running_jobs(spark):
+    """Reading the width of a post-exchange frame through its RDD runs
+    the exchange stages (and the consuming action runs them again);
+    widen must decide from the plan and start no job."""
+    from voter_gateway_spark.operators.skew import num_partitions, widen
+
+    sc = spark.sparkContext
+
+    def njobs():
+        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+
+    agg = spark.range(200).repartition(3).groupBy((F.col("id") % 7).alias("k")).count()
+    j0 = njobs()
+    widened = widen(agg)
+    union_width = num_partitions(agg.unionByName(agg))
+    assert njobs() == j0
+    assert union_width == 2 * num_partitions(agg)
+    assert num_partitions(widened) >= sc.defaultParallelism
+    assert sorted(widened.collect()) == sorted(agg.collect())
+
+
+def test_codegen_cache_holds_a_warm_query_mix(spark):
+    """A mix of more than 100 generated classes (Spark's default cache
+    size) compiles nothing new when it runs a second time."""
+    import functools
+
+    from pyspark.sql import DataFrame
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def mix():
+        parts = [spark.range(3).selectExpr(f"id * {i + 7919} + 13 AS x") for i in range(120)]
+        return functools.reduce(DataFrame.unionByName, parts).collect()
+
+    n0 = compiled.getCount()
+    first = mix()
+    n1 = compiled.getCount()
+    second = mix()
+    assert n1 - n0 > 100
+    assert compiled.getCount() == n1
+    assert first == second
+
+
 def test_lower_merge_routing_matches_functional_plan():
     """The MERGE-sink lowering applies the same column routing as
     MergePlan.execute: excluded/preserved skip the update, moved-to

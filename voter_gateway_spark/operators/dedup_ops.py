@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.operators.skew import widen
-from voter_gateway_spark.session import ckpt, ckpt_lazy, ckpt_parallel
+from voter_gateway_spark.session import Py4JError, ckpt, ckpt_lazy, ckpt_parallel
 
 
 def _c(col: Column | str) -> Column:
@@ -809,36 +809,31 @@ def minhash_lsh_pairs(
 
 # -- connected components ------------------------------------------------------
 
-def _driver_components(edges: DataFrame, rows=None) -> DataFrame:
-    """Driver-side union-find over a COLLECTED small edge list —
-    the size-gated fast path of connected_components. Union-by-min
-    keeps every root the minimum id of its merged set, so the final
-    find(x) is exactly "min id reachable from x", the distributed
-    contract. NULL endpoints mirror join semantics: a null never
-    links anything (it appears in the output labeled by itself), and
-    its partner keeps its own label unless linked elsewhere.
+# Directed-edge budget of the driver union-find gate, shared by
+# connected_components and incremental_component_assign.
+DRIVER_MAX_EDGES = 100_000
 
-    `rows`: the already-collected edge list, when the size gate's
-    probe collected it — skips a second collect job."""
-    import pyspark.sql.types as T
 
-    if rows is None:
-        rows = edges.collect()
+def _union_find(rows) -> dict:
+    """{node: component} over collected (a, b) edge rows, every non-null
+    endpoint included. Union-by-min keeps every root the minimum id of
+    its merged set, so the final find(x) is exactly "min id reachable
+    from x", the distributed contract. A NULL endpoint never links
+    anything, mirroring join semantics."""
     parent: dict = {}
 
     def find(x):
         root = x
-        while parent.get(root, root) != root:
+        while parent[root] != root:
             root = parent[root]
-        while parent.get(x, x) != root:  # path compression
+        while parent[x] != root:  # path compression
             parent[x], x = root, parent[x]
         return root
 
-    ids = set()
-    for r in rows:
-        a, b = r["a"], r["b"]
-        ids.add(a)
-        ids.add(b)
+    for a, b in rows:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
         if a is None or b is None:
             continue
         ra, rb = find(a), find(b)
@@ -847,16 +842,42 @@ def _driver_components(edges: DataFrame, rows=None) -> DataFrame:
         if rb < ra:
             ra, rb = rb, ra
         parent[rb] = ra
+    return {x: find(x) for x in parent}
 
-    id_type = edges.schema["a"].dataType
-    schema = T.StructType(
-        [
-            T.StructField("id", id_type, True),
-            T.StructField("component", id_type, True),
-        ]
+
+def _edge_id_type(edges: DataFrame, a: str, b: str):
+    """The common type of two endpoint columns, as a union of them
+    would widen it (analysis only, no job)."""
+    return edges.select(F.col(a).alias("_e")).unionByName(
+        edges.select(F.col(b).alias("_e"))
+    ).schema["_e"].dataType
+
+
+def _id_frame(spark, rows: list, names: tuple[str, str], id_type) -> DataFrame:
+    import pyspark.sql.types as T
+
+    schema = T.StructType([T.StructField(n, id_type, True) for n in names])
+    return spark.createDataFrame(rows, schema)
+
+
+def _driver_components(edges: DataFrame, rows=None) -> DataFrame:
+    """Driver-side union-find over a COLLECTED small edge list —
+    the size-gated fast path of connected_components (see _union_find
+    for the labelling contract). A NULL endpoint appears in the output
+    labeled by itself, and its partner keeps its own label unless
+    linked elsewhere.
+
+    `rows`: the already-collected edge list, when the size gate's
+    probe collected it — skips a second collect job."""
+    if rows is None:
+        rows = edges.collect()
+    pairs = [(r["a"], r["b"]) for r in rows]
+    out = list(_union_find(pairs).items())
+    if any(a is None or b is None for a, b in pairs):
+        out.append((None, None))
+    return _id_frame(
+        edges.sparkSession, out, ("id", "component"), edges.schema["a"].dataType
     )
-    out = [(i, i if i is None else find(i)) for i in ids]
-    return edges.sparkSession.createDataFrame(out, schema)
 
 
 def connected_components(
@@ -864,7 +885,7 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    driver_max_edges: int = 100_000,
+    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (id, component) where
     component = min id reachable through the pair graph. Pairs alone
@@ -880,11 +901,11 @@ def connected_components(
     (diameter ≪ 10) still converge in 2–3.
 
     SIZE GATE (r13 verdict ask #3): graphs at/under `driver_max_edges`
-    directed edges are collected and labeled with driver-side
-    union-find (union-by-min roots, so find(x) IS the component min —
-    the identical contract), built as one createDataFrame. The
-    iterative path's cost at toy scale is pure per-round job latency
-    — measured ~55 s of scheduler time to pointer-jump a 500-node
+    (default DRIVER_MAX_EDGES) directed edges are collected and labeled
+    with driver-side union-find (union-by-min roots, so find(x) IS the
+    component min — the identical contract), built as one
+    createDataFrame. The iterative path's cost at toy scale is pure
+    per-round job latency — measured ~55 s of scheduler time to pointer-jump a 500-node
     long-chain mutual-kNN graph (~20 rounds × per-round overhead) that
     union-find labels in microseconds. The gate's edge count comes
     from the same materialization round 1 would pay, 100k edges
@@ -898,6 +919,8 @@ def connected_components(
     dedup_corpus_pruned keep documents whose cluster already has a
     representative, with no signal anything went wrong.
     """
+    if driver_max_edges is None:
+        driver_max_edges = DRIVER_MAX_EDGES
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).transform(ckpt_lazy)
     if driver_max_edges:
@@ -993,10 +1016,21 @@ def incremental_component_assign(
     bridges TWO existing clusters therefore merges them here exactly
     as a full recompute would.
 
-    Scale: the component iteration runs over a graph of batch nodes +
-    TOUCHED cluster labels (batch-sized); the corpus-side update is a
-    single broadcast join against the (batch-bounded) relabel table —
-    the corpus is never shuffled, which is the entire point."""
+    Scale: the component graph is batch nodes + TOUCHED cluster labels
+    (batch-sized), and the corpus-side update is a single broadcast
+    join against the (batch-bounded) relabel table — the corpus is
+    never shuffled, which is the entire point.
+
+    DRIVER RELABEL: the day's edges (batch→corpus-label and
+    batch-internal, tagged) are collected ONCE under connected_
+    components' size gate (DRIVER_MAX_EDGES directed edges). When the
+    whole list fits, union-find on the driver yields the labels, the
+    relabel table (touched labels whose component changed) and the
+    batch labels, and the map is built as cluster_map ⋈
+    broadcast(relabel) ∪ batch_ids ⋈ broadcast(labels) — no iterative
+    rounds and no component frame to join back, which is most of a
+    small day's jobs. Above the gate the edges go to the distributed
+    components path, with no second size probe."""
     bid = batch_ids.select(F.col(batch_ids.columns[0]).alias("id")).distinct()
     cm = cluster_map.select(
         F.col(cluster_map.columns[0]).alias("_cid"),
@@ -1009,35 +1043,55 @@ def incremental_component_assign(
             F.col(bipartite_pairs.columns[1]).alias("_cid"),
         )
         .join(cm, "_cid")
-        .select("id_a", F.col("_ccomp").alias("id_b"))
+        .select("id_a", F.col("_ccomp").alias("id_b"), F.lit(True).alias("_bc"))
     )
     nn = batch_pairs.select(
         F.col(batch_pairs.columns[0]).alias("id_a"),
         F.col(batch_pairs.columns[1]).alias("id_b"),
+        F.lit(False).alias("_bc"),
     )
-    comp = connected_components(bc.unionByName(nn))
-    # corpus clusters whose label got absorbed into a smaller-id
-    # component — batch-bounded by construction
-    touched_labels = bc.select(F.col("id_b").alias("id")).distinct()
-    relabel = (
-        comp.join(touched_labels, "id")
-        .where(F.col("id") != F.col("component"))
-        .select(F.col("id").alias("_old"), F.col("component").alias("_new"))
-    )
-    updated_corpus = (
-        cm.join(F.broadcast(relabel), cm["_ccomp"] == F.col("_old"), "left")
-        .select(
-            F.col("_cid").alias("id"),
-            F.coalesce(F.col("_new"), F.col("_ccomp")).alias("component"),
+    edges = bc.unionByName(nn)
+    # the gate counts directed edges, two per collected row
+    max_rows = DRIVER_MAX_EDGES // 2
+    rows = edges.limit(max_rows + 1).collect() if max_rows else None
+    if rows is not None and len(rows) <= max_rows:
+        root = _union_find((r["id_a"], r["id_b"]) for r in rows)
+        touched = {r["id_b"] for r in rows if r["_bc"] and r["id_b"] is not None}
+        id_type = _edge_id_type(edges, "id_a", "id_b")
+        spark = edges.sparkSession
+        relabel = F.broadcast(
+            _id_frame(
+                spark,
+                [(t, root[t]) for t in touched if root[t] != t],
+                ("_old", "_new"),
+                id_type,
+            )
         )
+        labels = F.broadcast(
+            _id_frame(spark, list(root.items()), ("id", "component"), id_type)
+        )
+    else:
+        # checkpointed for the components rounds and the touched-label
+        # scan below; driver_max_edges=0 skips a second size probe
+        edges = ckpt_lazy(edges)
+        labels = connected_components(edges, driver_max_edges=0)
+        # corpus clusters whose label got absorbed into a smaller-id
+        # component — batch-bounded by construction
+        touched_labels = edges.where("_bc").select(F.col("id_b").alias("id")).distinct()
+        relabel = F.broadcast(
+            labels.join(touched_labels, "id")
+            .where(F.col("id") != F.col("component"))
+            .select(F.col("id").alias("_old"), F.col("component").alias("_new"))
+        )
+    updated_corpus = cm.join(relabel, cm["_ccomp"] == F.col("_old"), "left").select(
+        F.col("_cid").alias("id"),
+        F.coalesce(F.col("_new"), F.col("_ccomp")).alias("component"),
     )
-    batch_assigned = comp.join(bid, "id")
-    batch_singletons = bid.join(comp, "id", "left_anti").select(
-        "id", F.col("id").alias("component")
+    # batch docs outside every edge are singletons labelled by themselves
+    batch_labelled = bid.join(labels, "id", "left").select(
+        "id", F.coalesce(F.col("component"), F.col("id")).alias("component")
     )
-    return updated_corpus.unionByName(batch_assigned).unionByName(
-        batch_singletons
-    )
+    return updated_corpus.unionByName(batch_labelled)
 
 
 # -- cross-corpus contamination ------------------------------------------------
@@ -1648,6 +1702,30 @@ def bloom_maybe_flags(
     )
 
 
+def admission_path(
+    corpus: DataFrame, text_col: str, words: DataFrame | BloomIndex | None = None
+) -> str:
+    """Which plan bloom_admission runs for this corpus: "direct" (one
+    broadcast left-anti join on text) when no prebuilt `words` table is
+    given and Catalyst's optimized-plan size estimate of the corpus
+    text column is at or under spark.sql.autoBroadcastJoinThreshold —
+    the test Spark's own planner applies before broadcasting a join
+    side — and "bloom" otherwise: over the threshold, an unknown
+    estimate (Spark defaults it to Long.MaxValue, e.g. for frames built
+    from Python rows), broadcast disabled (-1), or a prebuilt table.
+    Reads plan statistics only; runs no Spark job."""
+    if words is not None:
+        return "bloom"
+    try:
+        conf = corpus.sparkSession._jsparkSession.sessionState().conf()
+        threshold = conf.autoBroadcastJoinThreshold()
+        plan = corpus.select(text_col)._jdf.queryExecution().optimizedPlan()
+        size = int(str(plan.stats().sizeInBytes()))
+    except (AttributeError, Py4JError):  # pragma: no cover - Connect only
+        return "bloom"
+    return "direct" if 0 <= size <= threshold else "bloom"
+
+
 def bloom_admission(
     corpus: DataFrame,
     batch: DataFrame,
@@ -1658,18 +1736,28 @@ def bloom_admission(
     n_bits: int | None = None,
     words: DataFrame | BloomIndex | None = None,
 ) -> DataFrame:
-    """Exact-dedup admission with a Bloom pre-filter: admit every batch
-    row whose text does not appear in the corpus. The Bloom filter has
-    NO false negatives, so rows it clears ("definitely new") are
-    admitted without ever touching the corpus; only the ~fpp fraction
-    it flags "maybe" (true duplicates plus false positives) reaches the
-    exact text-equality verify join. Output is therefore EXACT for any
-    filter sizing — an undersized, saturated bloom only degrades the
-    pruning rate, never correctness (property-tested at m=2^16 forced
-    saturation).
+    """Exact-dedup admission: admit every batch row whose text does not
+    appear in the corpus (NULL texts are always admitted). Two plans
+    give the identical output; admission_path picks one per call:
 
-    Scale envelope: at the default 9.6 bits/key + k=7 (~1% fpp), a 10^9
-    -key corpus is a ~1.2 GB word table — the practical broadcast
+    - DIRECT, while the corpus text column is at or under Spark's
+      broadcast threshold (and no prebuilt `words` is passed): one
+      broadcast left-anti join of the batch against the corpus texts.
+      At that size the corpus key set broadcasts, and the plain
+      anti-join is the cheaper plan (measured crossover in SCALING.md),
+      without the bloom's build and probe jobs.
+    - BLOOM, above the threshold, when the size is unknown, when
+      broadcast is disabled, or whenever a prebuilt `words` table is
+      passed. The Bloom filter has NO false negatives, so rows it
+      clears ("definitely new") are admitted without ever touching the
+      corpus; only the ~fpp fraction it flags "maybe" (true duplicates
+      plus false positives) reaches the exact text-equality verify
+      join. Output is therefore EXACT for any filter sizing — an
+      undersized, saturated bloom only degrades the pruning rate, never
+      correctness (property-tested at m=2^16 forced saturation).
+
+    Bloom scale envelope: at the default 9.6 bits/key + k=7 (~1% fpp),
+    a 10^9-key corpus is a ~1.2 GB word table — the practical broadcast
     ceiling. Beyond that, the partition-pruned band index
     (build_band_index/probe_band_index) is the admission path; the two
     compose (bloom in front of the index probe) since the bloom is
@@ -1679,12 +1767,12 @@ def bloom_admission(
     persisted corpus), and broadcast-only verify joins — the corpus is
     NEVER shuffled or broadcast per batch, which is what the plain
     anti-join cannot avoid once the corpus key set outgrows the
-    broadcast threshold (measured crossover in SCALING.md).
+    broadcast threshold.
 
-    Steady-state callers build the word table ONCE (build_bloom_words,
-    optionally persisted/cached) and pass it via `words` (+ its
-    `n_bits`) so successive batches pay only the probe; omitting it
-    rebuilds the filter from `corpus` per call.
+    Steady-state callers of the bloom path build the word table ONCE
+    (build_bloom_words, optionally persisted/cached) and pass it via
+    `words` (+ its `n_bits`) so successive batches pay only the probe;
+    omitting it rebuilds the filter from `corpus` per call.
 
     Reference shape: fuzzy_merger.rb:21-36's persistent candidate pool;
     the bloom is the admission-time analogue of its indexed pool."""
@@ -1709,22 +1797,25 @@ def bloom_admission(
             )
         n_bits, n_hashes = words.n_bits, words.n_hashes
         words = words.words
-    elif words is None:
-        if n_hashes is None:
-            n_hashes = 7
+    elif words is not None and n_bits is None:
+        raise ValueError("n_bits is required when passing a prebuilt words table")
+    elif admission_path(corpus, text_col, words) == "direct":
+        texts = corpus.select(F.col(text_col).alias("_ctext"))
+        return batch.join(
+            F.broadcast(texts), F.col(text_col) == F.col("_ctext"), "left_anti"
+        )
+    # raw-DataFrame words path: n_hashes MUST equal the build's value —
+    # a mismatch probes the wrong bit positions and admits true
+    # duplicates. Prefer build_bloom_index/BloomIndex, which binds both.
+    if n_hashes is None:
+        n_hashes = 7
+    if words is None:
         if n_bits is None:
             n_keys = corpus.count() or 1
             n_bits = _next_pow2(int(n_keys * bits_per_key))
         words = build_bloom_words(
             corpus.select(fp.alias("_fp")), "_fp", n_bits, n_hashes
         )
-    elif n_bits is None:
-        raise ValueError("n_bits is required when passing a prebuilt words table")
-    # raw-DataFrame words path: n_hashes MUST equal the build's value —
-    # a mismatch probes the wrong bit positions and admits true
-    # duplicates. Prefer build_bloom_index/BloomIndex, which binds both.
-    if n_hashes is None:
-        n_hashes = 7
     fp_batch = batch.withColumn("_bfp", fp)
     flags = bloom_maybe_flags(fp_batch, "_bfp", words, n_bits, n_hashes)
     # fp is a pure function of the text, so flags join back by

@@ -11,6 +11,50 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from voter_gateway_spark.session import Py4JError
+
+
+def num_partitions(df: DataFrame) -> int:
+    """The frame's partition count, read from its physical plan WITHOUT
+    running it.
+
+    ``df.rdd.getNumPartitions()`` is not free under AQE: building the
+    RDD of a plan with exchanges executes their stages, and the
+    consuming action then runs them again. Here the count comes from
+    the plan AQE starts from: an exchange reports its planned
+    partition count (the runtime coalesce may lower it), a union sums
+    its children, a broadcast side contributes nothing, and only a
+    leaf scan builds its RDD — which runs no job. Falls back to the
+    RDD when the JVM plan cannot be read (e.g. Spark Connect)."""
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+            # no AQE, so building the RDD executes nothing
+            return df.rdd.getNumPartitions()
+        return _plan_partitions(plan.inputPlan())
+    except (AttributeError, Py4JError):  # pragma: no cover
+        return df.rdd.getNumPartitions()
+
+
+def _plan_partitions(plan) -> int:
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_partitions(plan.inputPlan())
+    if name == "InMemoryTableScanExec":
+        # scanning the cache would build it; its plan knows the count
+        return _plan_partitions(plan.relation().cachedPlan())
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = plan.children()
+    kids = [kids.apply(i) for i in range(kids.size())]
+    kids = [k for k in kids if k.getClass().getSimpleName() != "BroadcastExchangeExec"]
+    if not kids:
+        rdd = plan.executeColumnar() if plan.supportsColumnar() else plan.execute()
+        return rdd.getNumPartitions()
+    counts = [_plan_partitions(k) for k in kids]
+    return sum(counts) if name == "UnionExec" else max(counts)
+
 
 def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Raise a narrow input to at least the session's default
@@ -23,10 +67,11 @@ def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     repartition up-front costs one cheap shuffle of the raw rows and
     buys full-width compute. No-op — no shuffle — when the input is
     already at least that wide, so cluster-scale inputs with thousands
-    of scan partitions pass through untouched.
+    of scan partitions pass through untouched. The width is read from
+    the plan (:func:`num_partitions`), so deciding runs no Spark job.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if num_partitions(df) < target:
         return df.repartition(target)
     return df
 

@@ -7047,16 +7047,17 @@ FROM b GROUP BY 1, 2
 
 
 def dedup_bloom_admission(spark, sf_dir):
-    """Exact-dedup admission behind a Bloom pre-filter
-    (operators/dedup_ops.bloom_admission): the corpus half
-    (doc_id < 400) is compressed once into a broadcastable word table;
-    the arriving batch (doc_id >= 300 — overlapping, so real duplicates
-    flow) is admitted iff its text is not already in the corpus. The
+    """Exact-dedup admission (operators/dedup_ops.bloom_admission): the
+    arriving batch (doc_id >= 300 — overlapping, so real duplicates
+    flow) is admitted iff its text is not already in the corpus half
+    (doc_id < 400). The plan follows the corpus size: at or under
+    Spark's broadcast threshold (this fixture) it is one broadcast
+    left-anti join on text; above it the corpus is compressed once into
+    a broadcastable bloom word table, and only the "maybe" fraction
+    (true dups + ~1% fpp) reaches the text-equality verify join — the
     bloom has no false negatives, so the output is EXACT for any filter
-    sizing — only the "maybe" fraction (true dups + ~1% fpp) ever
-    reaches the text-equality verify join. Steady-state cost per batch:
-    one broadcast probe + one verify join over the maybes; the corpus
-    is never reshuffled."""
+    sizing and the corpus is never reshuffled. A prebuilt `words` table
+    always takes the bloom path. Both plans admit the same rows."""
     docs = _t(spark, sf_dir, "documents")
     admitted = dedup_ops.bloom_admission(
         docs.where(F.col("doc_id") < 400),
@@ -7110,9 +7111,11 @@ def pipeline_daily_ingest(spark, sf_dir):
     proves two chained increments land exactly where a from-scratch
     rebuild does — including batches that bridge day-1 clusters.
 
-    Scale shape: per day, the corpus is touched by (a) one broadcast
-    bloom probe + a maybes-bounded verify (never a corpus shuffle —
-    see bloom_admission), (b) the bipartite band join (|batch| ×
+    Scale shape: per day, the corpus is touched by (a) the exact
+    admission — one broadcast anti-join while the corpus texts fit the
+    broadcast threshold, else one broadcast bloom probe + a
+    maybes-bounded verify (never a corpus shuffle — see
+    bloom_admission), (b) the bipartite band join (|batch| ×
     collision rate; the persisted band index is the production form,
     dedup_band_index_probe), and (c) ONE broadcast relabel join on the
     cluster map. Component iteration runs on the batch-sized touched

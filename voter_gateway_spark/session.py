@@ -286,6 +286,13 @@ def build_spark(
     explicit shuffle-partition sizing, Arrow enabled for the few
     pandas-UDF paths. On a real cluster, master/shuffle partitions
     come from spark-submit; this helper is for local runs and tests.
+
+    The code-generation cache holds 1000 compiled classes instead of
+    Spark's 100: one voter import cycle generates ~270 classes, so at
+    100 entries every warm cycle recompiled ~265 of them; at 1000 it
+    compiles 0–4. The setting is a static conf that binds when the
+    first session of a JVM first generates code; a later session in
+    the same JVM keeps the cache size the first one set.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -307,6 +314,7 @@ def build_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if reliable_checkpoint_dir():
         # without this, df.checkpoint() data is never deleted when the
