@@ -88,7 +88,6 @@ SLOW_TESTS = {
     "test_operators.py::test_ivfpq_oracle_ks_not_equal_centroids",
     "test_bloom_split_jsonl.py::TestBloomAdmission::test_duplicate_ids_do_not_mix_fingerprints",
     "test_operators.py::test_ivfpq_residual_deterministic_rerun",
-    "test_import_job.py::test_fuzzy_only_match_plan_no_exact_rules",
     "test_properties_cdc.py::test_apply_changes_matches_python_fold",
     "test_plans.py::test_ivf_cell_assignment_is_shuffle_free",
     "test_plans.py::test_no_row_python_in_catalog[pipeline_fs_admission]",
@@ -113,7 +112,6 @@ SLOW_TESTS = {
     "test_checkpointing.py::test_reliable_checkpoint_identical_results_and_files",
     "test_plans.py::test_no_row_python_in_catalog[docs_ppr_expansion]",
     "test_plans.py::test_no_row_python_in_catalog[embed_pagerank]",
-    "test_import_job.py::test_fuzzy_wired_into_match_cascade",
     "test_analytics.py::test_source_overlap_matches_python_reference",
     "test_linkage.py::test_fs_entities_pair_structure",
     "test_plans.py::test_no_row_python_in_catalog[embed_ppr_seeds]",

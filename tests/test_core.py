@@ -158,6 +158,28 @@ def test_dedup_symmetric_invariant_raises(spark):
         plan.execute()
 
 
+def test_invariant_counts_equal_self_join_counts(spark):
+    """invariant_counts' one grouped aggregate equals the two-count form
+    (reflexive filter count, symmetric self-join count) with duplicate
+    pks: pk 2 appears twice, so each row pointing at 2 pairs with both
+    copies; row 5 is reflexive, which also counts once as symmetric;
+    NULL targets never count, a NULL pk never matches."""
+    matches = spark.createDataFrame(
+        [(1, None), (2, 1), (2, 1), (3, 2), (4, 2), (5, 5), (None, 2), (6, None), (7, 9)],
+        "id int, _target_id int",
+    )
+    plan = DedupPlan(matches.select("id"), pk="id")
+    reflexive = matches.where(F.col("_target_id") == F.col("id")).count()
+    m = matches.where(F.col("_target_id").isNotNull())
+    a, b = m.alias("a"), m.alias("b")
+    symmetric = (
+        a.join(b, F.expr("a._target_id = b.id"))
+        .where(F.expr("b._target_id IS NOT NULL"))
+        .count()
+    )
+    assert plan.invariant_counts(matches) == (reflexive, symmetric) == (1, 7)
+
+
 def test_copy_column(spark):
     t = spark.createDataFrame([Row(k=1, v="t1"), Row(k=2, v="t2")], "k int, v string")
     s = spark.createDataFrame([Row(k=1, v="s1")], "k int, v string")

@@ -19,15 +19,29 @@ threshold. A per-trigram frequency cap (stop-trigram pruning) bounds
 the worst-case explosion at 100 TB; capped trigrams only shrink the
 candidate pool for pathological tokens.
 
-All expressions are native Catalyst (no UDFs).
+The claiming rounds (`fuzzy_claiming_rounds`) have two paths. A small
+residual — at most DRIVER_MAX_ROWS sources and targets together, an
+exact candidate fanout of at most DRIVER_MAX_PAIRS, unique non-null string
+or integral ids, trigram sets under 500 elements — is collected once
+and claimed on the driver with an in-memory inverted index; anything
+else runs the distributed rounds (probes, hazard guard, one checkpoint
+per round). Both return identical rows: the sets stay computed by
+`trigrams()` in Spark, the driver's similarity is the same IEEE
+division of the same integers, and the output is rounded by the same
+`F.round(…, 6)`. Why the size rule makes the claim order match is in
+`_driver_claims`.
+
+All Spark expressions are native Catalyst (no UDFs).
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections import Counter, defaultdict
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from voter_gateway_spark.operators.skew import widen
 from voter_gateway_spark.session import ckpt, ckpt_lazy
@@ -593,6 +607,147 @@ def edit_distance_pairs(
     )
 
 
+# -- claiming rounds -------------------------------------------------------------
+
+# Row budget of the driver claiming path, sources and targets together.
+# The nightly voter residual is ~1,100 rows; 5,000 rows of 30 trigrams
+# each take about 20 MB of driver memory as Python sets.
+DRIVER_MAX_ROWS = 5_000
+# Candidate-pair budget of the driver path: the exact inverted-index
+# fanout Σ_tg s_n·t_n summed over the fuzzy columns, which bounds the
+# driver's counting work (0.85 CPU s of Python for one round at the
+# cap, 1,000 × 2,000 rows of 20 trigrams, on a 4-core x86 host).
+DRIVER_MAX_PAIRS = 2_000_000
+# Trigram sets must stay below this size for the driver path (see
+# _driver_claims for why).
+DRIVER_MAX_SET = 500
+
+
+def _better(a: tuple, b: tuple | None) -> bool:
+    """(similarity, id) a beats b: higher similarity, then lower id."""
+    return b is None or a[0] > b[0] or (a[0] == b[0] and a[1] < b[1])
+
+
+def _driver_claims(
+    unmatched: DataFrame,
+    pool: DataFrame,
+    columns: list[str],
+    source_id: str,
+    target_id: str,
+    threshold: float,
+) -> DataFrame | None:
+    """fuzzy_claiming_rounds on the driver, or None when the residual
+    is not provably small.
+
+    One job collects both sides' ids and trigram sets (a side-tagged
+    union, at most DRIVER_MAX_ROWS + 1 rows fetched). The driver path
+    runs only when every one of these holds; otherwise the caller runs
+    the distributed rounds and the bounded collect is the only waste:
+    - at most DRIVER_MAX_ROWS rows came back;
+    - ids are string or integral, non-null and unique per side (the
+      distributed claim semantics assume them too);
+    - every trigram set has fewer than DRIVER_MAX_SET elements;
+    - the exact candidate fanout is at most DRIVER_MAX_PAIRS.
+
+    Each round is the distributed round computed with an in-memory
+    inverted index: similarity inter/(sn+tn−inter) qualified by
+    `> 1 − threshold`; each source takes its top target (similarity
+    desc, tid asc); each target goes to its best source (similarity
+    desc, sid asc); claimed rows leave both sides. NULL or empty sets
+    share no trigram and never pair.
+
+    The distributed path orders its claims by the 6-dp ROUNDED
+    similarity; the driver orders by the exact one. They agree: with
+    sets under 500 elements every qualifying union is ≤ 997, so two
+    distinct ratios differ by ≥ 1/997² > 1e-6 and round apart, while
+    equal ratios are equal doubles (IEEE division is correctly
+    rounded). The output goes through the same F.round(…, 6)."""
+    if not DRIVER_MAX_ROWS:
+        return None
+    sid_type = unmatched.schema[source_id].dataType
+    tid_type = pool.schema[target_id].dataType
+    if not all(
+        isinstance(t, (T.IntegralType, T.StringType)) for t in (sid_type, tid_type)
+    ):
+        return None
+    names = [f"_g{i}" for i in range(len(columns))]
+    sets = [trigrams(c).alias(n) for c, n in zip(columns, names)]
+    # one partition: the limit is then one take job, and above the gate
+    # it stops reading after DRIVER_MAX_ROWS + 1 rows. The price is that
+    # the inputs' last narrow stage runs in that one task.
+    rows = (
+        unmatched.select(F.lit(True).alias("_src"), F.col(source_id).alias("_sid"), *sets)
+        .unionByName(
+            pool.select(F.lit(False).alias("_src"), F.col(target_id).alias("_tid"), *sets),
+            allowMissingColumns=True,
+        )
+        .coalesce(1)
+        .limit(DRIVER_MAX_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > DRIVER_MAX_ROWS:
+        return None
+    src: dict = {}
+    tgt: dict = {}
+    for r in rows:
+        side, ident = (src, r["_sid"]) if r["_src"] else (tgt, r["_tid"])
+        if ident is None or ident in side:
+            return None
+        tg = [frozenset(r[n] or ()) for n in names]
+        if any(len(g) >= DRIVER_MAX_SET for g in tg):
+            return None
+        side[ident] = tg
+    fanout = 0
+    for i in range(len(columns)):
+        t_n = Counter(g for v in tgt.values() for g in v[i])
+        fanout += sum(
+            n * t_n[g]
+            for g, n in Counter(g for v in src.values() for g in v[i]).items()
+        )
+    if fanout > DRIVER_MAX_PAIRS:
+        return None
+
+    floor = 1.0 - threshold
+    claims = []
+    for i, col in enumerate(columns):
+        index = defaultdict(list)
+        for tid, v in tgt.items():
+            for g in v[i]:
+                index[g].append(tid)
+        winner: dict = {}  # tid -> (similarity, sid) of its best source
+        for sid, v in src.items():
+            sg = v[i]
+            inter = Counter()
+            for g in sg:
+                inter.update(index.get(g, ()))
+            top = None
+            for tid, n in inter.items():
+                sim = n / (len(sg) + len(tgt[tid][i]) - n)
+                if sim > floor and _better((sim, tid), top):
+                    top = (sim, tid)
+            if top is not None and _better((top[0], sid), winner.get(top[1])):
+                winner[top[1]] = (top[0], sid)
+        for tid, (sim, sid) in winner.items():
+            claims.append((sid, tid, sim, col))
+            del src[sid], tgt[tid]
+
+    schema = T.StructType(
+        [
+            T.StructField(source_id, sid_type),
+            T.StructField(f"matched_{target_id}", tid_type),
+            T.StructField("similarity", T.DoubleType()),
+            T.StructField("_fuzzy_column", T.StringType()),
+        ]
+    )
+    # at most DRIVER_MAX_ROWS / 2 rows, but a createDataFrame frame has
+    # no size estimate: without the hint a join against it shuffles
+    return F.broadcast(
+        unmatched.sparkSession.createDataFrame(claims, schema).withColumn(
+            "similarity", F.round("similarity", 6)
+        )
+    )
+
+
 def fuzzy_claiming_rounds(
     unmatched: DataFrame,
     pool: DataFrame,
@@ -609,13 +764,25 @@ def fuzzy_claiming_rounds(
     lowest source id) wins — a deterministic version of the reference's
     arbitrary within-round claiming (deviation documented, SURVEY
     §4.3.2). Claimed targets leave the pool; matched sources leave the
-    unmatched set; per-round materialization truncates lineage exactly
-    like the reference's temp-table refinement (fuzzy_merger.rb:38-67).
+    unmatched set (fuzzy_merger.rb:38-67).
+
+    Two paths, identical output. A small residual (the gate in
+    `_driver_claims`: DRIVER_MAX_ROWS rows, DRIVER_MAX_PAIRS candidate
+    pairs, unique non-null string/integral ids, trigram sets under
+    DRIVER_MAX_SET) is collected in one job and claimed on the driver;
+    its exact-similarity order equals the distributed path's 6-dp
+    rounded order because every union is ≤ 997. Otherwise each round
+    runs `top1_fuzzy_match` (dup-fanout probe, hazard guard) and a
+    per-round checkpoint truncates lineage like the reference's
+    temp-table refinement.
 
     Returns (source_id, matched_<target_id>, similarity, _fuzzy_column).
     """
     if not columns:
         raise ValueError("fuzzy_claiming_rounds needs at least one fuzzy column")
+    claims = _driver_claims(unmatched, pool, columns, source_id, target_id, threshold)
+    if claims is not None:
+        return claims
     results = []
     for col in columns:
         best = top1_fuzzy_match(

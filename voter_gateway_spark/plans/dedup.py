@@ -70,16 +70,33 @@ class DedupPlan:
 
     def invariant_counts(self, matches: DataFrame) -> tuple[int, int]:
         """(reflexive, symmetric) violation counts — the audit form of
-        the invariants (merge_audit_sql.rb:21-36 counts, no abort)."""
-        reflexive = matches.where(F.col(TARGET_ID) == F.col(f"`{self.pk}`")).count()
+        the invariants (merge_audit_sql.rb:21-36 counts, no abort).
+
+        One grouped aggregate over the matched rows: each row refers
+        to the key `_target_id` and is a duplicate under its own pk.
+        Symmetric violations are the pairs of matched rows a, b with
+        a._target_id = b.pk, i.e. Σ_k refs_k·dups_k — the self-join's
+        count, duplicate pks included. Reflexive violations are the
+        rows whose `_target_id` is their own pk."""
+        pk = F.col(f"`{self.pk}`")
         m = matches.where(F.col(TARGET_ID).isNotNull())
-        a, b = m.alias("a"), m.alias("b")
-        symmetric = (
-            a.join(b, F.expr(f"a.{TARGET_ID} = b.`{self.pk}`"))
-            .where(F.expr(f"b.{TARGET_ID} IS NOT NULL"))
-            .count()
+        refs = m.select(
+            F.col(TARGET_ID).alias("_k"),
+            F.lit(1).alias("_r"),
+            F.lit(0).alias("_d"),
+            (F.col(TARGET_ID) == pk).cast("int").alias("_x"),
         )
-        return reflexive, symmetric
+        dups = m.select(
+            pk.alias("_k"), F.lit(0).alias("_r"), F.lit(1).alias("_d"), F.lit(0).alias("_x")
+        )
+        row = (
+            refs.unionByName(dups)
+            .groupBy("_k")
+            .agg(F.sum("_r").alias("_r"), F.sum("_d").alias("_d"), F.sum("_x").alias("_x"))
+            .agg(F.sum("_x").alias("_x"), F.sum(F.col("_r") * F.col("_d")).alias("_s"))
+            .collect()[0]
+        )
+        return int(row["_x"] or 0), int(row["_s"] or 0)
 
     def check_invariants(self, matches: DataFrame) -> None:
         reflexive, symmetric = self.invariant_counts(matches)
@@ -161,7 +178,7 @@ class DedupPlan:
         matches = self._matches()
         if check:
             # invariants run before the destructive fold (fail-fast gate);
-            # cache because we take three actions over the match state
+            # cache: the invariant query and the fold both read the match state
             matches = matches.cache()
             self.check_invariants(matches)
 

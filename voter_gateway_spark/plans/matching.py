@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.schema import render_expr, spark_type
-from voter_gateway_spark.session import ckpt
+from voter_gateway_spark.session import ckpt_lazy
 
 SOURCE_ID = "_source_id"
 TARGET_ID = "_target_id"
@@ -244,14 +244,13 @@ class MatchPlan:
             fuzzy_claiming_rounds,
         )
 
-        # the claiming rounds iterate over this frame (per-round
-        # refinement); checkpoint so the cascade computes once
-        out = out.transform(ckpt)
+        # the claiming rounds read this frame several times; checkpoint
+        # so the cascade computes once, inside the first job that reads it
+        out = out.transform(ckpt_lazy)
         unmatched = out.where(F.col(TARGET_ID).isNull())
-        claimed_pks = (
-            out.where(F.col(TARGET_ID).isNotNull())
-            .select(F.col(TARGET_ID).alias("_claimed"))
-            .distinct()
+        # duplicates are harmless: a left-anti join ignores them on its right
+        claimed_pks = out.where(F.col(TARGET_ID).isNotNull()).select(
+            F.col(TARGET_ID).alias("_claimed")
         )
         pool = self.target.join(
             claimed_pks,

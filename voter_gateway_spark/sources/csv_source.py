@@ -36,7 +36,7 @@ class CSVSource:
     remove_malformed: bool = False  # S6
 
     _corrupt_col: str = field(default="_corrupt_record", repr=False)
-    _blank_skipped: int | None = field(default=None, repr=False)
+    _malformed_pair: tuple[int, int] | None = field(default=None, repr=False)
 
     def _raw_lines(self, spark: SparkSession) -> DataFrame:
         """Raw physical lines decoded with `encoding`, one string column
@@ -181,31 +181,31 @@ class CSVSource:
             flagged = flagged.cache()
             self._flagged = flagged
             self._spark = spark
+            self._malformed_pair = None
             return flagged.where(~F.col("_malformed")).drop(self._corrupt_col, "_malformed")
         return flagged.drop("_malformed")
 
-    # (the newline-byte-compatibility precondition for
-    # _blank_line_count is checked directly: '\n' must encode to the
-    # single byte 0x0A — see the check inside _blank_line_count)
+    def malformed_count(self) -> int:
+        """A7 malformed-row count (reference: wc -l diff, csv_audit.rb:123-133).
 
-    def _blank_line_count(self) -> int:
-        """Blank physical lines the csv source silently skipped.
-
-        Spark's csv reader (used by _raw_lines for its encoding support)
-        unconditionally drops blank lines, so they never reach the
-        field-count check — but the reference's wc-l-diff accounting
-        (csv_audit.rb:123-133) counts a blank line as a malformed row
-        (it fails the field-count test). Recover them by comparing a
-        physical line count (spark.read.text keeps blank lines; its
-        UTF-8-only decoding cannot change the COUNT for the allowlisted
-        newline-byte-compatible encodings — validated below, raising
-        for UTF-16/UTF-32-family encodings where the byte-count
-        arithmetic would silently be wrong) against the csv-visible
-        line count. Cost: two extra input scans, paid once and only
-        when malformed_count() is called — the flagged-row count itself
-        still comes scan-free from the cached frame.
+        The sum of two counts, taken together by one union-and-aggregate
+        query on the first call and cached for the instance until the
+        next read():
+        - flagged rows of the cached parse (field-count or parse
+          failures);
+        - blank physical lines. Spark's csv reader (used by _raw_lines
+          for its encoding support) drops them before the field-count
+          check, but the reference's line-count-minus-loaded-rows
+          arithmetic counts each as malformed. They are recovered as a
+          physical line count (spark.read.text keeps blank lines)
+          minus the csv-visible line count. The text source decodes
+          UTF-8 only, which cannot change a line COUNT as long as '\\n'
+          encodes to the single byte 0x0A — checked below, raising for
+          UTF-16/UTF-32/EBCDIC, where that arithmetic would be wrong.
         """
-        if self._blank_skipped is None:
+        if not hasattr(self, "_flagged"):
+            raise ValueError("read() with remove_malformed=True first")
+        if self._malformed_pair is None:
             # precise newline-byte check instead of an encoding-name
             # allowlist (which wrongly rejected 0x0A-safe single-byte
             # codecs like cp437/koi8-r and ASCII-compatible multi-byte
@@ -221,17 +221,16 @@ class CSVSource:
                     "line counts from the byte-oriented text source "
                     "would be wrong"
                 )
-            physical = self._spark.read.text(self.path).count()
-            seen = self._raw_lines(self._spark).count()
-            self._blank_skipped = physical - seen
-        return self._blank_skipped
-
-    def malformed_count(self) -> int:
-        """A7 malformed-row count (reference: wc -l diff, csv_audit.rb:123-133).
-
-        Includes blank physical lines (see _blank_line_count) so the
-        tally matches the reference's line-count-minus-loaded-rows
-        arithmetic exactly."""
-        if not hasattr(self, "_flagged"):
-            raise ValueError("read() with remove_malformed=True first")
-        return self._flagged.where(F.col("_malformed")).count() + self._blank_line_count()
+            parts = [
+                self._spark.read.text(self.path),
+                self._raw_lines(self._spark),
+                self._flagged.where(F.col("_malformed")),
+            ]
+            tagged = [p.select(F.lit(i).alias("_k")) for i, p in enumerate(parts)]
+            physical, seen, flagged = (
+                tagged[0].unionByName(tagged[1]).unionByName(tagged[2])
+                .agg(*[F.count(F.when(F.col("_k") == i, 1)) for i in range(3)])
+                .collect()[0]
+            )
+            self._malformed_pair = (flagged, physical - seen)
+        return sum(self._malformed_pair)
