@@ -6,10 +6,13 @@ localCheckpoint, so iterative jobs (connected components, fuzzy
 claiming, collapse) survive executor loss on a preemptible cluster.
 These tests run the two flagship iterative paths under both modes and
 assert identical results, plus that the reliable path actually writes
-checkpoint data into the configured directory.
+checkpoint data into the configured directory. The job-count tests pin
+the checkpoint API's contract on both paths: one job per eager ckpt,
+one job per local ckpt_defer/ckpt_parallel batch, and one job per frame
+on the reliable path.
 """
 
-import os
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -17,7 +20,12 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.operators import dedup_ops, fuzzy
-from voter_gateway_spark.session import ckpt, reliable_checkpoint_dir
+from voter_gateway_spark.session import (
+    ckpt,
+    ckpt_defer,
+    ckpt_parallel,
+    reliable_checkpoint_dir,
+)
 
 
 def _components(spark):
@@ -53,6 +61,139 @@ def _claims(spark):
 def test_flag_off_by_default(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
     assert reliable_checkpoint_dir() is None
+
+
+def _last_job_id(spark):
+    """Id of the newest Spark job once the listener bus has drained. Job
+    ids are global and increase by one per job, whatever thread runs it."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(10000)
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+@contextmanager
+def _jobs(spark):
+    """Count the Spark jobs started inside the block, on any thread.
+    Yields a one-element list filled in at block exit."""
+    box = [None]
+    first = _last_job_id(spark)
+    try:
+        yield box
+    finally:
+        box[0] = _last_job_id(spark) - first
+
+
+def _frames(spark, n):
+    """n shuffle-free frames: a lazy mark runs no job for them, so every
+    counted job is a materialization."""
+    return [
+        spark.range(0, 10 * (i + 1)).withColumn("x", F.col("id") * (i + 2))
+        for i in range(n)
+    ]
+
+
+def _sums(frames):
+    return [f.agg(F.sum("x")).collect()[0][0] for f in frames]
+
+
+def _want(n):
+    return [(i + 2) * sum(range(10 * (i + 1))) for i in range(n)]
+
+
+def test_local_path_job_counts(spark, monkeypatch):
+    """One job per eager ckpt, and one job per batch for any N >= 1."""
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    with _jobs(spark) as n:
+        eager = ckpt(_frames(spark, 1)[0])
+    assert n[0] == 1
+
+    for size in (1, 3):
+        with _jobs(spark) as n:
+            with ckpt_defer():
+                out = [ckpt(f) for f in _frames(spark, size)]
+        assert n[0] == 1, size
+        assert _sums(out) == _want(size)
+
+    with _jobs(spark) as n:
+        out = ckpt_parallel(_frames(spark, 3))
+    assert n[0] == 1
+    assert _sums(out) == _want(3)
+
+    # inside an open batch ckpt_parallel and a nested ckpt_defer join
+    # it: neither runs a job of its own, the outer exit runs one
+    first, *rest = _frames(spark, 3)
+    with _jobs(spark) as outer:
+        with ckpt_defer():
+            a = ckpt(first)
+            with _jobs(spark) as inner:
+                b = ckpt_parallel(rest[:1])
+                with ckpt_defer():
+                    c = ckpt(rest[1])
+    assert inner[0] == 0
+    assert outer[0] == 1
+    assert _sums([a, *b, c]) == _want(3)
+    assert _sums([eager]) == _want(1)
+
+
+def test_reliable_path_job_counts_and_files(spark, tmp_path, monkeypatch):
+    """Reliable path: never batched, one compute-and-write job per frame,
+    files in the checkpoint directory."""
+    sc = spark.sparkContext
+    ckpt_dir = tmp_path / "reliable_jobs"
+    installed = sc.getCheckpointDir()
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt_dir))
+
+    def rdd_dirs():
+        root = sc.getCheckpointDir()
+        return set(Path(root.removeprefix("file:")).glob("rdd-*")) if root else set()
+
+    def deferred(frames):
+        with ckpt_defer():
+            return [ckpt(f) for f in frames]
+
+    for batch in (deferred, ckpt_parallel):
+        before = rdd_dirs()
+        with _jobs(spark) as n:
+            out = batch(_frames(spark, 3))
+        assert n[0] == 3, batch
+        new = rdd_dirs() - before
+        assert len(new) == 3, batch
+        assert all(any(p.glob("part-*")) for p in new), new
+        assert _sums(out) == _want(3)
+
+    # ckpt installs the configured directory on first use; an earlier
+    # test in this session may already have installed its own
+    root = sc.getCheckpointDir()
+    assert root == installed or root.removeprefix("file:").startswith(str(ckpt_dir))
+
+
+def test_failing_batch_runs_one_job_and_closes_the_batch(spark, monkeypatch):
+    """A task failure at batch exit surfaces after the one failed job (no
+    per-frame re-run), and the batch is closed afterwards. The failure
+    is a Java exception PySpark does not convert, so it reaches Python
+    as a Py4JJavaError: the case a ``Py4JError`` handler meant for a
+    missing JVM would catch."""
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    good_a, good_b = _frames(spark, 2)
+    bad = spark.range(0, 20).withColumn(
+        "x",
+        F.expr(
+            "reflect('java.lang.Integer', 'parseInt', "
+            "if(id = 7, 'ckpt-boom', cast(id AS string)))"
+        ),
+    )
+    with _jobs(spark) as n:
+        with pytest.raises(Exception, match="ckpt-boom"):
+            with ckpt_defer():
+                ckpt(good_a)
+                ckpt(bad)
+                ckpt(good_b)
+    assert n[0] == 1
+
+    with _jobs(spark) as n:
+        ckpt(_frames(spark, 1)[0])
+    assert n[0] == 1
 
 
 def test_reliable_checkpoint_identical_results_and_files(spark, tmp_path, monkeypatch):

@@ -685,7 +685,7 @@ def incremental_minhash_pairs(
             )
         )
 
-    # the two sides are independent — one union materialization job
+    # the two sides are independent — one materialization job
     # (guide §2.6) instead of two sequential barriers
     nrows, crows = ckpt_parallel([rep_sigs(new_df), rep_sigs(corpus_df)])
     nreps = nrows.where(F.col("_id") == F.col("_rep"))

@@ -7166,10 +7166,10 @@ def pipeline_daily_ingest(spark, sf_dir):
         # batch-side and corpus-side rep frames inside
         # incremental_minhash_pairs plus the batch-internal collapse
         # frame inside minhash_lsh_pairs — are mutually independent,
-        # so their barriers overlap in ONE union materialization job
+        # so their barriers overlap in ONE materialization job
         # instead of three sequential ones. `admitted` stays a lazy
         # checkpoint shared by all three (persist-marked: computed
-        # once inside the union job, reused by every stage).
+        # once by the first job that reads it, reused by every stage).
         with ckpt_defer():
             admitted = ckpt_lazy(
                 dedup_ops.bloom_admission(

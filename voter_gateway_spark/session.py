@@ -12,25 +12,22 @@ from __future__ import annotations
 import os
 import threading
 import uuid
-import warnings
 from contextlib import contextmanager
-from typing import Callable, Iterator
+from functools import reduce
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-try:  # py4j ships with pyspark; guard anyway for Connect-only installs
+try:  # re-exported for the operators' Connect fallbacks (dedup_ops, skew)
     from py4j.protocol import Py4JError
 except ImportError:  # pragma: no cover
     class Py4JError(Exception):
         pass
 
-_CKPT_CUT_WARNED = False
-
-# thread-local deferred-materialization state for ckpt_defer(): while a
-# batch is open on this thread, eager ckpt()/ckpt_parallel() calls
-# enqueue lazily-checkpointed frames here instead of each paying its
-# own materialization job; the batch exit materializes every enqueued
-# frame in ONE union job (guide §2.6 — overlap independent jobs).
+# thread-local ckpt_defer() state: while a batch is open on this thread,
+# ``pending`` collects the lazily-marked frames of its eager ckpt()
+# calls; the batch exit materializes them all in one job.
 _DEFER = threading.local()
 
 
@@ -53,105 +50,86 @@ def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate lineage on an intermediate that is reused or iterated on.
 
     Use as ``df.transform(ckpt)`` (eager) / ``df.transform(ckpt_lazy)``.
-    Honors :func:`reliable_checkpoint_dir`; the checkpoint directory is
-    installed on first use so plain ``SparkSession.builder`` sessions
-    (not just :func:`build_spark`) get the reliable path too. Such
-    sessions should also set
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (a
-    session-construction-time conf :func:`build_spark` sets for them)
-    or per-round checkpoint files accumulate for the life of the job.
+    Returns Spark's own ``df.localCheckpoint(eager)``, with one
+    exception: inside an open :func:`ckpt_defer` batch on this thread
+    an EAGER call marks the frame lazily and appends it to the batch.
+    The returned frame is the same checkpoint-backed DataFrame (same
+    plan truncation, same downstream plan shapes); its materialization
+    runs at batch exit. Lazy calls never join a batch — their contract
+    is already "materialize inside the first consuming job".
 
-    Inside an open :func:`ckpt_defer` batch on this thread, an EAGER
-    request is enqueued instead: the returned frame is the identical
-    checkpoint-backed DataFrame (same plan truncation, same downstream
-    plan shapes), but its materialization job runs at batch exit,
-    united with the other enqueued frames into one job. Lazy requests
-    never enqueue — their contract is already "materialize inside the
-    first consuming job".
+    Reliable path (:func:`reliable_checkpoint_dir` set): always Spark's
+    ``df.checkpoint(eager)``, never batched — one compute-and-write job
+    per eager frame. The checkpoint directory is installed on first
+    use, so plain ``SparkSession.builder`` sessions (not just
+    :func:`build_spark`) get the reliable path too. Such sessions
+    should also set ``spark.cleaner.referenceTracking.cleanCheckpoints
+    =true`` (a session-construction-time conf :func:`build_spark` sets
+    for them) or per-round checkpoint files accumulate for the life of
+    the job.
     """
-    pending = getattr(_DEFER, "pending", None)
-    out = _ckpt_raw(df, eager=False if (eager and pending is not None) else eager)
-    if eager and pending is not None:
-        pending.append(out)
-    return out
-
-
-def _ckpt_raw(df: DataFrame, eager: bool) -> DataFrame:
     d = reliable_checkpoint_dir()
-    if not d:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(d)
-    return df.checkpoint(eager=eager)
+    if d:
+        sc = df.sparkSession.sparkContext
+        if sc.getCheckpointDir() is None:
+            sc.setCheckpointDir(d)
+        return df.checkpoint(eager)
+    pending = getattr(_DEFER, "pending", None)
+    if eager and pending is not None:
+        out = df.localCheckpoint(eager=False)
+        pending.append(out)
+        return out
+    return df.localCheckpoint(eager)
 
 
-def _materialize_union(outs: list[DataFrame]) -> None:
-    """Materialize several lazily-checkpointed frames with ONE Spark
-    job: union their internal RDDs JVM-side and count. The union job's
-    stage graph contains every frame's stages, so the scheduler packs
-    them together (one frame's straggler tail back-fills with another
-    frame's tasks — guide §2.6) and the per-job scheduling overhead is
-    paid once instead of once per frame. ``SparkContext.runJob`` calls
-    ``rdd.doCheckpoint()`` on completion, which finds every partition
-    already cached by the job (localCheckpoint persists at mark time),
-    so no second job runs. Falls back to concurrent per-frame jobs on
-    a thread pool (``pyspark.InheritableThread`` — plain threads don't
-    inherit JVM-local job groups under pinned-thread mode) when the
-    JVM hooks are unavailable (Spark Connect)."""
-    if not outs:
-        return
-    if len(outs) == 1:
-        outs[0].count()
-        return
-    try:
-        jrdds = [o._jdf.queryExecution().toRdd() for o in outs]
-        u = jrdds[0]
-        for r in jrdds[1:]:
-            u = u.union(r)
-        u.count()
-    except (AttributeError, Py4JError):  # pragma: no cover - Connect only
-        from concurrent.futures import ThreadPoolExecutor
-
-        try:
-            from pyspark import inheritable_thread_target
-
-            def trigger(o: DataFrame) -> None:
-                inheritable_thread_target(lambda: o.count())()
-        except ImportError:
-            def trigger(o: DataFrame) -> None:
-                o.count()
-
-        with ThreadPoolExecutor(max_workers=len(outs)) as pool:
-            list(pool.map(trigger, outs))
+def _materialize(frames: list[DataFrame]) -> None:
+    """Materialize lazily checkpointed frames in ONE job: a ``noop``
+    write over the union of a constant projection of each frame. The
+    job computes (and so caches) every partition of every frame, and
+    the checkpoint completes when the job ends, so no second job runs."""
+    if frames:
+        marks = [f.select(F.lit(1).alias("_m")) for f in frames]
+        reduce(DataFrame.union, marks).write.format("noop").mode("overwrite").save()
 
 
 @contextmanager
 def ckpt_defer():
-    """Defer every eager ckpt() issued on this thread inside the block
-    and materialize them ALL in one union job at block exit (guide
-    §2.6). Use around a group of operator calls whose internal eager
-    checkpoints are mutually independent — e.g. pipeline_daily_ingest's
-    per-day trio (two incremental rep frames + the batch-internal
-    collapse frame): the barriers overlap instead of running serially,
-    and N materialization jobs become one.
+    """Defer every eager :func:`ckpt` issued on this thread inside the
+    block and materialize them ALL in one job at block exit. Use around
+    a group of operator calls whose internal eager checkpoints are
+    mutually independent — e.g. pipeline_daily_ingest's per-day trio
+    (two incremental rep frames + the batch-internal collapse frame).
+    The frames' stages run inside a single job, so the per-job
+    scheduling round-trip is paid once instead of once per frame, and
+    one frame's straggler tail back-fills with another frame's tasks
+    instead of leaving cores idle through each barrier. Under AQE a
+    lazy mark still runs the frame's shuffle-map stages at call time;
+    the batch defers each frame's final stage.
+
+    A nested ``ckpt_defer`` joins the batch that is already open. On the
+    reliable path nothing is batched (see :func:`ckpt`): each eager
+    call runs its own compute-and-write job and the exit runs none.
 
     Frames MAY depend on each other or on shared lazy checkpoints —
-    materialization is pure, and shared upstream partitions are
-    persist-marked so concurrent stages reuse (or at worst briefly
-    duplicate) them — but dependent frames forfeit part of the overlap.
-    Do NOT run actions on the deferred frames inside the block: that
-    simply materializes them early (correct, serial)."""
-    prev = getattr(_DEFER, "pending", None)
-    _DEFER.pending = []
+    materialization is pure — but dependent frames forfeit part of the
+    overlap. Do NOT run actions on the deferred frames inside the block:
+    that simply materializes them early (correct, serial). Do NOT
+    overwrite a source that a deferred frame reads (the read → merge →
+    overwrite swaps of ``streaming/upsert_sink.py`` and
+    ``streaming/index_dedup.py`` must stay outside any batch): the
+    frame is computed at block exit and would read the new contents.
+    If the block raises, nothing is materialized; if materialization
+    fails, the error surfaces at block exit. Either way the batch is
+    closed, so later eager calls are eager again."""
+    if getattr(_DEFER, "pending", None) is not None:
+        yield
+        return
+    _DEFER.pending = frames = []
     try:
         yield
-        pending = _DEFER.pending
-        _DEFER.pending = prev
-        _materialize_union(pending)
     finally:
-        if getattr(_DEFER, "pending", None) is not prev:
-            _DEFER.pending = prev
+        _DEFER.pending = None
+    _materialize(frames)
 
 
 def ckpt_lazy(df: DataFrame) -> DataFrame:
@@ -160,66 +138,14 @@ def ckpt_lazy(df: DataFrame) -> DataFrame:
 
 
 def ckpt_parallel(dfs: list[DataFrame]) -> list[DataFrame]:
-    """Eagerly checkpoint several INDEPENDENT DataFrames with ONE
-    materialization job instead of one barrier each (optimization
-    guide §2.6: sequential eager checkpoints leave the cluster idle
-    through each barrier's tail). Results are identical to calling
-    :func:`ckpt` in a loop — materialization is pure — but the frames'
-    stages run inside a single union job (see
-    :func:`_materialize_union`), so wall time is the packed max() of
-    the frames rather than their sum AND the per-job scheduler
-    round-trips collapse to one. Use ONLY for frames with no
-    dependency on each other (a dependent frame would simply
-    recompute its input rather than corrupt anything, wasting the
-    win).
-
-    Inside an open :func:`ckpt_defer` batch the frames are enqueued
-    onto the batch instead (materialized at batch exit with everything
-    else)."""
-    if len(dfs) == 1:
-        return [ckpt(dfs[0])]
-    pending = getattr(_DEFER, "pending", None)
-    outs = _lazy_ckpt_concurrent(dfs)
-    if pending is not None:
-        pending.extend(outs)
-    else:
-        _materialize_union(outs)
-    return outs
-
-
-def _lazy_ckpt_concurrent(dfs: list[DataFrame]) -> list[DataFrame]:
-    """Issue ``localCheckpoint(eager=False)`` for several frames from a
-    thread pool. The lazy-checkpoint CALL is not free: under AQE it
-    materializes the frame's exchange stages (measured: a heavy
-    groupBy's whole map stage runs inside the call), so issuing the
-    calls sequentially would serialize exactly the work ckpt_parallel
-    exists to overlap. Threads are wrapped with
-    ``pyspark.inheritable_thread_target`` so JVM thread-local
-    properties (job group/description) propagate and pinned-thread-mode
-    JVM threads are cleaned up (r15 ADVICE); the checkpoint dir is
-    pre-resolved on the calling thread so worker threads never race the
-    first ``setCheckpointDir``."""
-    d = reliable_checkpoint_dir()
-    if d:
-        sc = dfs[0].sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(d)
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        from pyspark import inheritable_thread_target
-
-        try:
-            # Spark 4 form: passing the session also propagates job tags
-            fn = inheritable_thread_target(dfs[0].sparkSession)(
-                lambda df: _ckpt_raw(df, eager=False)
-            )
-        except Exception:  # pragma: no cover - pre-3.5 signature
-            fn = inheritable_thread_target(lambda df: _ckpt_raw(df, eager=False))
-    except ImportError:  # pragma: no cover - very old pyspark
-        fn = lambda df: _ckpt_raw(df, eager=False)  # noqa: E731
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return list(pool.map(fn, dfs))
+    """Eagerly checkpoint several DataFrames with ONE materialization
+    job instead of one barrier each: :func:`ckpt` of every frame inside
+    one :func:`ckpt_defer` batch (joining the caller's batch if one is
+    open). Results are identical to calling :func:`ckpt` in a loop;
+    frames that depend on each other forfeit part of the overlap. On
+    the reliable path this is exactly that loop: one job per frame."""
+    with ckpt_defer():
+        return [ckpt(d) for d in dfs]
 
 
 def ckpt_cut(df: DataFrame) -> DataFrame:
@@ -238,40 +164,19 @@ def ckpt_cut(df: DataFrame) -> DataFrame:
     round-trip plans in milliseconds. Rebuilding the DataFrame from
     the materialized internal-row RDD drops the origin reference, so
     the leaf reports plain default stats and planning stays O(plan).
+    Spark has no public equivalent, so this goes through the JVM
+    session (classic Spark only).
 
     Trade-off: the cut leaf loses its size estimate (defaults to
     spark.sql.defaultSizeInBytes), so it is never auto-broadcast —
     use only on iterative intermediates whose joins should shuffle
     anyway; keep plain :func:`ckpt` where downstream broadcast
-    decisions matter. Falls back to :func:`ckpt` (with a one-time
-    warning — r13 ADVICE: a silent fallback reintroduces the stats
-    hang with no signal) when the private JVM hooks are unavailable,
-    e.g. under Spark Connect."""
-    materialized = ckpt(df)
-    try:
-        jdf = materialized._jdf
-        jspark = df.sparkSession._jsparkSession
-        jnew = jspark.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(jnew, df.sparkSession)
-    except (AttributeError, Py4JError) as exc:
-        # _jdf/_jsparkSession absent (Spark Connect) — the cut cannot
-        # be applied; warn once so a reappearing stats-thunk hang on
-        # iterative plans is diagnosable instead of mysterious.
-        global _CKPT_CUT_WARNED
-        if not _CKPT_CUT_WARNED:
-            _CKPT_CUT_WARNED = True
-            warnings.warn(
-                "ckpt_cut: JVM rebuild hooks unavailable "
-                f"({exc!r}); falling back to plain checkpoint. "
-                "Iterative self-join plans may hit the driver-side "
-                "statistics-thunk hang documented in ckpt_cut's "
-                "docstring.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return materialized
+    decisions matter."""
+    jdf = ckpt(df)._jdf
+    jnew = df.sparkSession._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(jnew, df.sparkSession)
 
 
 def build_spark(
@@ -326,11 +231,7 @@ def build_spark(
         b = b.config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    ckpt_dir = reliable_checkpoint_dir()
-    if ckpt_dir and spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
-    return spark
+    return b.getOrCreate()
 
 
 class GatewaySession:
