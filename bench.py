@@ -14,6 +14,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench.spans import SparkCounters  # noqa: E402
 from voter_gateway_spark.queries import QUERIES  # noqa: E402
 from voter_gateway_spark.session import build_spark  # noqa: E402
 
@@ -110,45 +111,18 @@ BENCH_QUERIES = [
 ]
 
 
-def _stage_totals(spark) -> tuple[int, int, int, int] | None:
-    """Cumulative (shuffle_read, shuffle_write, mem_spill, disk_spill)
-    bytes over all retained stages, from the JVM AppStatusStore. The
-    100 TB story is shuffle-volume-shaped: per-query byte deltas make a
-    quadratic visible even when wall-clock noise hides it. Returns None
-    if the (version-specific) py4j surface is unavailable — the bench
-    then reports seconds only instead of failing."""
-    try:
-        sc = spark.sparkContext
-        # drain the listener bus so the store has seen the job's last
-        # stage-completed events before we snapshot
-        try:
-            sc._jsc.sc().listenerBus().waitUntilEmpty(5000)
-        except Exception:
-            time.sleep(0.2)
-        store = sc._jsc.sc().statusStore()
-        empty = sc._jvm.java.util.Collections.emptyList()
-        no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
-        it = store.stageList(empty, False, False, no_quantiles, empty).iterator()
-        read = write = mem = disk = 0
-        while it.hasNext():
-            s = it.next()
-            read += s.shuffleReadBytes()
-            write += s.shuffleWriteBytes()
-            mem += s.memoryBytesSpilled()
-            disk += s.diskBytesSpilled()
-        return read, write, mem, disk
-    except Exception:
-        return None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # retain enough stage history that per-query deltas never lose a
-    # stage to eviction mid-snapshot (default retainedStages is 1000)
+    # retain enough job and stage history that per-query deltas never
+    # lose one to eviction mid-snapshot (both default to 1000; the
+    # counters read jobs by id, then each job's stages)
     spark = build_spark(
         app_name="vgs-bench",
-        extra_conf={"spark.ui.retainedStages": "100000"},
+        extra_conf={
+            "spark.ui.retainedJobs": "100000",
+            "spark.ui.retainedStages": "100000",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -169,33 +143,21 @@ def main() -> None:
     skip = set(
         s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",") if s
     )
-    # SPARK_GRAFT_BENCH_EXTRA: comma-separated catalog queries appended
-    # for THIS run only — used by the decade runs to measure queries
-    # that aren't part of the stable 33-query headline (adding them to
-    # BENCH_QUERIES would shift the sf0.1 total every round and break
-    # the baseline comparison)
-    extra = []
-    for s in os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "").split(","):
-        if not s:
-            continue
-        if s in QUERIES and s not in BENCH_QUERIES:
-            extra.append(s)
-        else:
-            # no silent caps: a typo'd extra must be visible before the
-            # (long) decade run, not after it
-            print(f"bench: ignoring unknown/duplicate extra {s!r}", file=sys.stderr)
     timings: dict[str, float] = {}
     trial_sec: dict[str, list[float]] = {}
     shuffle_bytes: dict[str, int] = {}
     spill_bytes: dict[str, int] = {}
-    for name in BENCH_QUERIES + extra:
+    # per-query shuffle and spill byte deltas: the 100 TB story is
+    # shuffle-volume-shaped, and a byte delta makes a quadratic visible
+    # even when wall-clock noise hides it
+    counters = SparkCounters(spark)
+    for name in BENCH_QUERIES:
         if name in skip:
             continue
         best = float("inf")
         trials: list[float] = []
-        best_delta: tuple[int, int, int, int] | None = None
         for _ in range(runs):
-            before = _stage_totals(spark)
+            before = counters.snapshot()
             t0 = time.time()
             # the noop v2 sink forces FULL evaluation of every column.
             # count() (used through r3) lets Catalyst eliminate any
@@ -208,29 +170,25 @@ def main() -> None:
                 "overwrite"
             ).save()
             elapsed = time.time() - t0
-            after = _stage_totals(spark)
+            after = counters.snapshot()
             trials.append(round(elapsed, 3))
             if elapsed < best:
                 best = elapsed
-                if before is not None and after is not None:
-                    best_delta = tuple(a - b for a, b in zip(after, before))
+                # shuffle volume = bytes WRITTEN to shuffle (each byte
+                # counted once); spill = bytes that actually hit disk
+                shuffle_bytes[name] = (
+                    after["shuffle_write_bytes"] - before["shuffle_write_bytes"]
+                )
+                spill_bytes[name] = after["spill_bytes"] - before["spill_bytes"]
         timings[name] = round(best, 3)
         trial_sec[name] = trials
-        if best_delta is not None:
-            # shuffle volume = bytes WRITTEN to shuffle (each byte
-            # counted once); spill = bytes that actually hit disk
-            shuffle_bytes[name] = best_delta[1]
-            spill_bytes[name] = best_delta[3]
         # eager localCheckpoints pin block-manager memory until the
         # async ContextCleaner reclaims them; across a 28-query session
         # that backlog inflates later queries' GC time, so nudge the
         # cleaner between queries to keep per-query numbers independent
         spark.sparkContext._jvm.System.gc()
 
-    # extras are reported per-query but EXCLUDED from the headline sum —
-    # the whole point of the env hook is that the total stays comparable
-    # to the stable 33-query baseline across rounds
-    total = round(sum(v for k, v in timings.items() if k not in extra), 3)
+    total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline_queries_wall_clock",
         "value": total,
@@ -242,7 +200,7 @@ def main() -> None:
     # publish the perf-bar ratio in the artifact itself: best-of-N
     # total over the r1-comparable 16-query subset / the r1 baseline.
     # Only meaningful at the baseline's scale factor and with the full
-    # subset measured (decade runs skip/replace queries).
+    # subset measured (decade runs skip queries).
     if out["sf"] == 0.1 and all(q in timings for q in R1_BASELINE_QUERIES):
         r1_sub = round(sum(timings[q] for q in R1_BASELINE_QUERIES), 3)
         out["r1_comparable_sec"] = r1_sub

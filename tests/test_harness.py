@@ -1,0 +1,34 @@
+"""Measurement-harness guards; no Spark session.
+
+- every `tools/<name>.py` the docs tell a reader to run must exist;
+- bench.py's query lists must name catalog queries, so renaming a
+  catalog query fails here instead of in the middle of a bench run.
+"""
+
+import re
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
+DOCS = [
+    "README.md",
+    "SCALING.md",
+    "SURVEY.md",
+    ".claude/skills/verify/SKILL.md",
+]
+
+
+@pytest.mark.parametrize("doc", DOCS)
+def test_docs_name_only_existing_tools(doc):
+    named = set(re.findall(r"tools/(\w+\.py)", (ROOT / doc).read_text()))
+    missing = sorted(n for n in named if not (ROOT / "tools" / n).is_file())
+    assert not missing, f"{doc} names missing tools: {missing}"
+
+
+def test_bench_queries_are_catalog_queries(monkeypatch):
+    monkeypatch.syspath_prepend(str(ROOT))
+    import bench
+
+    assert set(bench.R1_BASELINE_QUERIES) <= set(bench.BENCH_QUERIES)
+    assert set(bench.BENCH_QUERIES) <= set(bench.QUERIES)

@@ -45,7 +45,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import _stage_totals  # noqa: E402
+from perfbench.spans import SparkCounters  # noqa: E402
 from voter_gateway_spark.operators import dedup_ops  # noqa: E402
 from voter_gateway_spark.session import build_spark, ckpt  # noqa: E402
 
@@ -66,10 +66,9 @@ def main() -> None:
     # salt: stress replicas duplicate TEXTS n-ways, so an unsalted
     # batch is 100% exact-duplicate and the bloom admits 0 rows —
     # every downstream per-day stage would then run on an empty set
-    # and measure nothing. Salting (text || ' #' || doc_id, the
-    # bloom_throughput --salt convention) restores the realistic
-    # web-corpus shape: all content distinct, near-dup structure
-    # (shared shingles across replicas) preserved.
+    # and measure nothing. Salting (text || ' #' || doc_id) restores
+    # the realistic web-corpus shape: all content distinct, near-dup
+    # structure (shared shingles across replicas) preserved.
     if "--no-salt" not in sys.argv:
         docs = docs.withColumn(
             "text", F.concat(F.col("text"), F.lit(" #"), F.col("doc_id"))
@@ -87,15 +86,14 @@ def main() -> None:
     stages_day: dict[str, dict] = {}
     state = {}
 
+    counters = SparkCounters(spark)
+
     def timed(book, name, fn):
-        before = _stage_totals(spark)
+        before = counters.snapshot()["shuffle_write_bytes"]
         t0 = time.time()
         out = fn()
         dt = time.time() - t0
-        after = _stage_totals(spark)
-        mb = None
-        if before is not None and after is not None:
-            mb = round((after[1] - before[1]) / 1e6, 3)
+        mb = round((counters.snapshot()["shuffle_write_bytes"] - before) / 1e6, 3)
         book[name] = {"s": round(dt, 3), "shuffle_mb": mb}
         print(f"{name}: {dt:.2f}s shuffle={mb}MB", flush=True)
         spark.sparkContext._jvm.System.gc()

@@ -10,9 +10,11 @@ cost decomposition both sinks share and the term that separates them:
   batch cost(swap)  = t_match_merge + t_write(FULL registry)  [O(N)]
   batch cost(MERGE) = t_match_merge + t_write(touched rows)   [O(batch)]
 
-This tool replays the fs_admission batch fold (same registry bootstrap,
-same perturbed arrival batches, same FS matcher + MergePlan as
-tools/fs_admission_throughput.py) as a plain loop and times, per batch:
+This tool replays the streaming FS-admission batch fold (a registry
+bootstrapped from the customer table, perturbed arrival batches,
+`linkage.fs_matches` + MergePlan per batch: the body that
+streaming/linkage_admission.stream_fs_admission runs) as a plain loop
+and times, per batch:
 
   - t_mm:      the match+merge compute alone (noop sink);
   - t_full:    parquet write of the FULL merged registry (swap bound);

@@ -155,6 +155,12 @@ def _collapse_exact(
     hash-green on null-free fixtures but divergent on null ids.
     Pinned by tests/test_collapse_windowed.py::test_null_ids_dropped.
 
+    Unique-id precondition: non-null `_id` values must be unique. The
+    rep filter `_id == _rep` elects every row that bears the group's
+    first id, so with duplicate ids a group gets several rep rows, and
+    each one multiplies through the band join, verification and
+    `expand`. Nothing here checks it: the id column must be a key.
+
     `stage`: optional callable applied to the full row frame BEFORE
     materialization, so callers stage derived per-rep columns (e.g.
     the MinHash signature) into the same single checkpoint. `_hh` is
@@ -528,11 +534,18 @@ def _minhash_band_rows_packed(
     """(_id, _b, _k0.._k{m-1}) LSH band rows with the band's signature
     slice PACKED into m = ceil(rows_per_band/2) bigints, two values per
     word (signature values are mod 2^31-1, so 31 bits each; lo<<31|hi
-    stays under 2^62 — no ANSI overflow). A bijection of the string
-    key `_minhash_band_rows` builds (candidate sets identical, proven
-    by construction), but the default 4-row band shuffles 16 bytes of
-    key instead of a ~40-byte concat-ws string (guide §2.3 "shuffle
-    fewer bytes / narrower types")."""
+    stays under 2^62 — no ANSI overflow). For non-null slices this is
+    a bijection of the string key `_minhash_band_rows` builds, so the
+    candidate sets are identical, but the default 4-row band shuffles
+    16 bytes of key instead of a ~40-byte concat-ws string (guide §2.3
+    "shuffle fewer bytes / narrower types").
+
+    NULL slices differ: a NULL signature element (null or degenerate
+    text) makes its packed key NULL, so the row drops out of the
+    equi-join, while the string form's concat_ws skips the null and
+    still keys the row. The two forms give the same OUTPUT only
+    because exact-Jaccard verification filters those pairs at
+    threshold > 0; at threshold=0.0 they would diverge."""
     def band_keys(b: int) -> list[Column]:
         ks = []
         for j in range(0, rows_per_band, 2):

@@ -19,6 +19,9 @@ count (A7) needs no extra scan of the original.
 
 from __future__ import annotations
 
+import csv
+import io
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,24 +58,23 @@ class CSVSource:
             .csv(self.path)
         )
 
-    def headers(self, spark: SparkSession) -> list[str]:
-        """S3 header sniffing — read only the first row."""
+    def _first_fields(self, spark: SparkSession) -> list[str]:
+        """The first physical line, regex-stripped (S5) and parsed with
+        the csv dialect; [] for an empty file. One `limit(1)` job."""
         first = self._raw_lines(spark).limit(1).collect()
         if not first:
             return []
         line = first[0][0]
         if self.remove_expression:
-            import re
-
             line = re.sub(self.remove_expression, "", line)
-        # parse the single header line with the csv dialect
-        import csv as _csv
-        import io
-
-        reader = _csv.reader(
+        reader = csv.reader(
             io.StringIO(line), delimiter=self.delimiter, quotechar=self.quote
         )
-        return [h.strip() for h in next(reader)]
+        return next(reader)
+
+    def headers(self, spark: SparkSession) -> list[str]:
+        """S3 header sniffing — read only the first row."""
+        return [h.strip() for h in self._first_fields(spark)]
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Load to an all-string DataFrame (S1/S4), applying the regex
@@ -92,8 +94,6 @@ class CSVSource:
                 .csv(self.path)
             )
 
-        import re as _re
-
         if self.header:
             cols = self.headers(spark)
         else:
@@ -101,26 +101,7 @@ class CSVSource:
             # names from it would turn field values into a (possibly
             # duplicate-named) schema; synthesize _c0.._cN exactly like
             # the fast csv path, sizing N from the first line's fields
-            first = self._raw_lines(spark).limit(1).collect()
-            if first:
-                import csv as _csv
-                import io as _io
-
-                line = first[0][0]
-                if self.remove_expression:
-                    line = _re.sub(self.remove_expression, "", line)
-                n_fields = len(
-                    next(
-                        _csv.reader(
-                            _io.StringIO(line),
-                            delimiter=self.delimiter,
-                            quotechar=self.quote,
-                        )
-                    )
-                )
-            else:
-                n_fields = 0
-            cols = [f"_c{i}" for i in range(n_fields)]
+            cols = [f"_c{i}" for i in range(len(self._first_fields(spark)))]
         schema_ddl = ", ".join(f"`{c}` STRING" for c in cols)
         lines = self._raw_lines(spark)
         if self.header:
@@ -158,7 +139,7 @@ class CSVSource:
         # header is well-formed. Count delimiters outside quoted
         # segments on the raw line and compare to len(cols)-1; the
         # corrupt-record flag still catches quote/parse failures.
-        qe = _re.escape(self.quote)
+        qe = re.escape(self.quote)
         unquoted = F.regexp_replace(value, f"{qe}[^{qe}]*{qe}", "")
         n_delims = F.length(unquoted) - F.length(
             F.replace(unquoted, F.lit(self.delimiter), F.lit(""))
