@@ -2,7 +2,8 @@
 
 - every `tools/<name>.py` the docs tell a reader to run must exist;
 - bench.py's query lists must name catalog queries, so renaming a
-  catalog query fails here instead of in the middle of a bench run.
+  catalog query fails here instead of in the middle of a bench run;
+- `session.small_rows` is the engine's only bounded-collect size gate.
 """
 
 import re
@@ -32,3 +33,18 @@ def test_bench_queries_are_catalog_queries(monkeypatch):
 
     assert set(bench.R1_BASELINE_QUERIES) <= set(bench.BENCH_QUERIES)
     assert set(bench.BENCH_QUERIES) <= set(bench.QUERIES)
+
+
+def test_small_rows_is_the_only_bounded_collect():
+    """A `.limit(n + 1)` probe outside session.py is a hand-rolled copy
+    of the small-input gate; route it through `session.small_rows`."""
+    probe = re.compile(r"\.limit\([^)]*\+\s*1\)")
+    pkg = ROOT / "voter_gateway_spark"
+    hits = [
+        f"{p.relative_to(ROOT)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "session.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if probe.search(line)
+    ]
+    assert not hits, f"bounded collects outside session.small_rows: {hits}"

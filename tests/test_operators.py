@@ -141,6 +141,55 @@ def test_ngram_jaccard_pairs_finds_near_dups(spark):
     assert pairs[0].jaccard == pytest.approx(3 / 5)
 
 
+def test_ngram_pairs_expanded_match_naive_all_pairs(spark):
+    """Fixed-input default-tier twin of the slow hypothesis property:
+    the expanded emission equals the naive O(n²) all-pairs definition
+    on a corpus with injected exact duplicates (the collapse path),
+    shared-shingle near-dups, and short docs that shingle whole."""
+    fox = "the quick brown fox jumps over the lazy dog"
+    lorem = "lorem ipsum dolor sit amet consectetur"
+    docs = [
+        fox,
+        "the quick brown fox jumps over a lazy dog",
+        fox,
+        "quick brown fox jumps over the lazy cat",
+        lorem,
+        fox,
+        "lorem ipsum dolor sit amet adipiscing",
+        "red green",
+        "red green",
+        lorem,
+        "one two three four five",
+    ]
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id bigint, text string")
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup_ops.ngram_jaccard_pairs(
+            df, "doc_id", "text", k=3, threshold=0.3, expand_pairs=True
+        ).collect()
+    }
+
+    def shingles(d):
+        w = d.split()
+        if len(w) < 3:
+            return {" ".join(w)}
+        return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
+
+    exp = {}
+    for a in range(len(docs)):
+        for b in range(a + 1, len(docs)):
+            sa, sb = shingles(docs[a]), shingles(docs[b])
+            j = len(sa & sb) / len(sa | sb)
+            if j >= 0.3:
+                exp[(a, b)] = round(j, 6)
+    # not vacuous: 5 exact-duplicate pairs and some partial overlaps
+    assert sum(v == 1.0 for v in exp.values()) == 5
+    assert any(v < 1.0 for v in exp.values())
+    assert got.keys() == exp.keys()
+    for k in exp:
+        assert got[k] == pytest.approx(exp[k], abs=1e-6), k
+
+
 def test_minhash_lsh_finds_near_dups(spark):
     df = spark.createDataFrame(
         [
@@ -880,7 +929,7 @@ def test_connected_components_deep_chain_converges_fast(spark):
     assert len(out) == 121
 
 
-def test_connected_components_driver_gate_matches_distributed(spark):
+def test_connected_components_driver_gate_matches_distributed(spark, monkeypatch):
     # the size-gated driver union-find must be bit-identical to the
     # pointer-jumping path: chains, islands, merged triangles, and
     # singleton-free output on a deterministic pseudo-random graph
@@ -889,24 +938,30 @@ def test_connected_components_driver_gate_matches_distributed(spark):
     rng = random.Random(14)
     pairs_rows = [Row(id_a=rng.randrange(60), id_b=rng.randrange(60)) for _ in range(90)]
     pairs = spark.createDataFrame(pairs_rows, "id_a bigint, id_b bigint")
-    via_driver = sorted(
-        map(tuple, dedup_ops.connected_components(pairs).collect())
-    )
-    via_dist = sorted(
-        map(
-            tuple,
-            dedup_ops.connected_components(pairs, driver_max_edges=0).collect(),
-        )
-    )
+    driver_runs = []
+    real_driver = dedup_ops._driver_components
+
+    def spy(*a, **kw):
+        driver_runs.append(len(a[1]))
+        return real_driver(*a, **kw)
+
+    monkeypatch.setattr(dedup_ops, "_driver_components", spy)
+
+    def components(**kw):
+        return sorted(map(tuple, dedup_ops.connected_components(pairs, **kw).collect()))
+
+    via_driver = components()
+    assert driver_runs == [180]
+    via_dist = components(driver_max_edges=0)
+    assert driver_runs == [180]
     assert via_driver == via_dist
-    # gate threshold boundary: exactly at the limit still takes the
-    # driver path (<=), one below forces distributed
-    assert sorted(
-        map(
-            tuple,
-            dedup_ops.connected_components(pairs, driver_max_edges=180).collect(),
-        )
-    ) == via_dist
+    # gate threshold boundary: exactly at the limit (90 pairs = 180
+    # directed edges) still takes the driver path (<=); one below runs
+    # the over-limit probe and then the distributed rounds
+    assert components(driver_max_edges=180) == via_dist
+    assert driver_runs == [180, 180]
+    assert components(driver_max_edges=179) == via_dist
+    assert driver_runs == [180, 180]
 
 
 def test_incremental_minhash_pairs_bipartite_only(spark):

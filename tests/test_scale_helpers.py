@@ -202,6 +202,31 @@ def test_widen_decides_from_the_plan_without_running_jobs(spark):
     assert sorted(widened.collect()) == sorted(agg.collect())
 
 
+def test_small_rows_is_one_bounded_job(spark):
+    """The operators' shared small-input gate: every row at the limit,
+    None one row over it, one job either way on a many-partition frame,
+    and no job at all for a zero limit."""
+    from voter_gateway_spark.session import small_rows
+
+    sc = spark.sparkContext
+    # the explode hides Range's known row count, from which the
+    # optimizer would drop the limit and collect everything in one job
+    df = spark.range(0, 100, 1, 8).selectExpr("explode(array(id)) AS id")
+
+    def gated(max_rows, group):
+        sc.setJobGroup(group, "small_rows gate")
+        try:
+            return small_rows(df, max_rows), len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:  # what setJobGroup set, so later jobs run ungrouped
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    rows, jobs = gated(100, "small_rows_at_limit")
+    assert sorted(r.id for r in rows) == list(range(100)) and jobs == 1
+    assert gated(99, "small_rows_over_limit") == (None, 1)
+    assert gated(0, "small_rows_zero") == (None, 0)
+
+
 def test_codegen_cache_holds_a_warm_query_mix(spark):
     """A mix of more than 100 generated classes (Spark's default cache
     size) compiles nothing new when it runs a second time."""

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.operators.skew import widen
-from voter_gateway_spark.session import Py4JError, ckpt, ckpt_lazy, ckpt_parallel
+from voter_gateway_spark.session import Py4JError, ckpt, ckpt_lazy, ckpt_parallel, small_rows
 
 
 def _c(col: Column | str) -> Column:
@@ -873,17 +873,12 @@ def _id_frame(spark, rows: list, names: tuple[str, str], id_type) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _driver_components(edges: DataFrame, rows=None) -> DataFrame:
-    """Driver-side union-find over a COLLECTED small edge list —
-    the size-gated fast path of connected_components (see _union_find
-    for the labelling contract). A NULL endpoint appears in the output
-    labeled by itself, and its partner keeps its own label unless
-    linked elsewhere.
-
-    `rows`: the already-collected edge list, when the size gate's
-    probe collected it — skips a second collect job."""
-    if rows is None:
-        rows = edges.collect()
+def _driver_components(edges: DataFrame, rows: list) -> DataFrame:
+    """Driver-side union-find over `rows`, the COLLECTED small edge
+    list of `edges` — the size-gated fast path of connected_components
+    (see _union_find for the labelling contract). A NULL endpoint
+    appears in the output labeled by itself, and its partner keeps its
+    own label unless linked elsewhere."""
     pairs = [(r["a"], r["b"]) for r in rows]
     out = list(_union_find(pairs).items())
     if any(a is None or b is None for a, b in pairs):
@@ -913,19 +908,14 @@ def connected_components(
     tables. A 1000-link chain converges in ~11 rounds; near-dup graphs
     (diameter ≪ 10) still converge in 2–3.
 
-    SIZE GATE (r13 verdict ask #3): graphs at/under `driver_max_edges`
-    (default DRIVER_MAX_EDGES) directed edges are collected and labeled
-    with driver-side union-find (union-by-min roots, so find(x) IS the
-    component min — the identical contract), built as one
-    createDataFrame. The iterative path's cost at toy scale is pure
-    per-round job latency — measured ~55 s of scheduler time to pointer-jump a 500-node
-    long-chain mutual-kNN graph (~20 rounds × per-round overhead) that
-    union-find labels in microseconds. The gate's edge count comes
-    from the same materialization round 1 would pay, 100k edges
-    collect ~1.6 MB, and the precedent is bpe_train_local's
-    size-gated driver training (bit-identical outputs, same rationale:
-    driver work beats distributed work below a size floor). Set
-    driver_max_edges=0 to force the distributed path.
+    Two paths, identical output. When `session.small_rows` returns the
+    directed edge list (at most `driver_max_edges`, default
+    DRIVER_MAX_EDGES), driver-side union-find labels it (union-by-min
+    roots, so find(x) IS the component min) and the labels come back
+    as one createDataFrame; otherwise the pointer-jumping rounds run.
+    The edges are a lazy checkpoint, so the gate's action materializes
+    them for the rounds. Set driver_max_edges=0 to force the
+    distributed path.
 
     Raises RuntimeError if labels are still changing after `max_iter`
     rounds — silently returning non-converged labels would let
@@ -936,18 +926,9 @@ def connected_components(
         driver_max_edges = DRIVER_MAX_EDGES
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).transform(ckpt_lazy)
-    if driver_max_edges:
-        # ONE job for gate + collect (r15 optimization): fetch at most
-        # max+1 rows — getting <= max rows proves the limit returned
-        # the COMPLETE edge list, which union-find then labels without
-        # the separate count() job the r13 gate paid. On an over-limit
-        # graph only the FETCH is bounded (~max rows back to the
-        # driver); `edges` is a lazy checkpoint, so the probe job's
-        # doCheckpoint still materializes every partition — which the
-        # distributed path below then reuses (r15 ADVICE).
-        probe = edges.limit(driver_max_edges + 1).collect()
-        if len(probe) <= driver_max_edges:
-            return _driver_components(edges, rows=probe)
+    rows = small_rows(edges, driver_max_edges)
+    if rows is not None:
+        return _driver_components(edges, rows)
     labels = (
         edges.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
     ).transform(ckpt_lazy)
@@ -1035,12 +1016,12 @@ def incremental_component_assign(
     never shuffled, which is the entire point.
 
     DRIVER RELABEL: the day's edges (batch→corpus-label and
-    batch-internal, tagged) are collected ONCE under connected_
-    components' size gate (DRIVER_MAX_EDGES directed edges). When the
-    whole list fits, union-find on the driver yields the labels, the
-    relabel table (touched labels whose component changed) and the
-    batch labels, and the map is built as cluster_map ⋈
-    broadcast(relabel) ∪ batch_ids ⋈ broadcast(labels) — no iterative
+    batch-internal, tagged) are collected ONCE by `session.small_rows`
+    under connected_components' size gate (DRIVER_MAX_EDGES directed
+    edges). When the whole list fits, union-find on the driver yields
+    the labels, the relabel table (touched labels whose component
+    changed) and the batch labels, and the map is built as cluster_map
+    ⋈ broadcast(relabel) ∪ batch_ids ⋈ broadcast(labels) — no iterative
     rounds and no component frame to join back, which is most of a
     small day's jobs. Above the gate the edges go to the distributed
     components path, with no second size probe."""
@@ -1065,9 +1046,8 @@ def incremental_component_assign(
     )
     edges = bc.unionByName(nn)
     # the gate counts directed edges, two per collected row
-    max_rows = DRIVER_MAX_EDGES // 2
-    rows = edges.limit(max_rows + 1).collect() if max_rows else None
-    if rows is not None and len(rows) <= max_rows:
+    rows = small_rows(edges, DRIVER_MAX_EDGES // 2)
+    if rows is not None:
         root = _union_find((r["id_a"], r["id_b"]) for r in rows)
         touched = {r["id_b"] for r in rows if r["_bc"] and r["id_b"] is not None}
         id_type = _edge_id_type(edges, "id_a", "id_b")

@@ -20,7 +20,8 @@ the worst-case explosion at 100 TB; capped trigrams only shrink the
 candidate pool for pathological tokens.
 
 The claiming rounds (`fuzzy_claiming_rounds`) have two paths. A small
-residual — at most DRIVER_MAX_ROWS sources and targets together, an
+residual — at most DRIVER_MAX_ROWS sources and targets together, as
+`session.small_rows` (the engine's one small-input gate) reports, an
 exact candidate fanout of at most DRIVER_MAX_PAIRS, unique non-null string
 or integral ids, trigram sets under 500 elements — is collected once
 and claimed on the driver with an in-memory inverted index; anything
@@ -44,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from voter_gateway_spark.operators.skew import widen
-from voter_gateway_spark.session import ckpt, ckpt_lazy
+from voter_gateway_spark.session import ckpt, ckpt_lazy, small_rows
 
 DEFAULT_THRESHOLD = 0.5  # fuzzy_merger.rb:5
 
@@ -639,11 +640,11 @@ def _driver_claims(
     """fuzzy_claiming_rounds on the driver, or None when the residual
     is not provably small.
 
-    One job collects both sides' ids and trigram sets (a side-tagged
-    union, at most DRIVER_MAX_ROWS + 1 rows fetched). The driver path
-    runs only when every one of these holds; otherwise the caller runs
-    the distributed rounds and the bounded collect is the only waste:
-    - at most DRIVER_MAX_ROWS rows came back;
+    `session.small_rows` collects both sides' ids and trigram sets (a
+    side-tagged union) in one bounded job. The driver path runs only
+    when every one of these holds; otherwise the caller runs the
+    distributed rounds and the bounded collect is the only waste:
+    - the union has at most DRIVER_MAX_ROWS rows;
     - ids are string or integral, non-null and unique per side (the
       distributed claim semantics assume them too);
     - every trigram set has fewer than DRIVER_MAX_SET elements;
@@ -662,8 +663,6 @@ def _driver_claims(
     distinct ratios differ by ≥ 1/997² > 1e-6 and round apart, while
     equal ratios are equal doubles (IEEE division is correctly
     rounded). The output goes through the same F.round(…, 6)."""
-    if not DRIVER_MAX_ROWS:
-        return None
     sid_type = unmatched.schema[source_id].dataType
     tid_type = pool.schema[target_id].dataType
     if not all(
@@ -672,20 +671,15 @@ def _driver_claims(
         return None
     names = [f"_g{i}" for i in range(len(columns))]
     sets = [trigrams(c).alias(n) for c, n in zip(columns, names)]
-    # one partition: the limit is then one take job, and above the gate
-    # it stops reading after DRIVER_MAX_ROWS + 1 rows. The price is that
-    # the inputs' last narrow stage runs in that one task.
-    rows = (
+    rows = small_rows(
         unmatched.select(F.lit(True).alias("_src"), F.col(source_id).alias("_sid"), *sets)
         .unionByName(
             pool.select(F.lit(False).alias("_src"), F.col(target_id).alias("_tid"), *sets),
             allowMissingColumns=True,
-        )
-        .coalesce(1)
-        .limit(DRIVER_MAX_ROWS + 1)
-        .collect()
+        ),
+        DRIVER_MAX_ROWS,
     )
-    if len(rows) > DRIVER_MAX_ROWS:
+    if rows is None:
         return None
     src: dict = {}
     tgt: dict = {}
@@ -767,9 +761,10 @@ def fuzzy_claiming_rounds(
     unmatched set (fuzzy_merger.rb:38-67).
 
     Two paths, identical output. A small residual (the gate in
-    `_driver_claims`: DRIVER_MAX_ROWS rows, DRIVER_MAX_PAIRS candidate
-    pairs, unique non-null string/integral ids, trigram sets under
-    DRIVER_MAX_SET) is collected in one job and claimed on the driver;
+    `_driver_claims`: at most DRIVER_MAX_ROWS rows by `session.
+    small_rows`, DRIVER_MAX_PAIRS candidate pairs, unique non-null
+    string/integral ids, trigram sets under DRIVER_MAX_SET) is
+    collected in one job and claimed on the driver;
     its exact-similarity order equals the distributed path's 6-dp
     rounded order because every union is ≤ 997. Otherwise each round
     runs `top1_fuzzy_match` (dup-fanout probe, hazard guard) and a

@@ -16,7 +16,7 @@ from contextlib import contextmanager
 from functools import reduce
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 try:  # re-exported for the operators' Connect fallbacks (dedup_ops, skew)
@@ -177,6 +177,19 @@ def ckpt_cut(df: DataFrame) -> DataFrame:
         jdf.queryExecution().toRdd(), jdf.schema(), False
     )
     return DataFrame(jnew, df.sparkSession)
+
+
+def small_rows(df: DataFrame, max_rows: int) -> list[Row] | None:
+    """Every row of ``df`` when it has at most ``max_rows``, else None:
+    the one "small enough to finish on the driver?" gate the operators
+    share. One bounded job: on one partition the limit is a single take
+    that stops reading after ``max_rows + 1`` rows (the price is that
+    the frame's last narrow stage runs in that one task). ``max_rows <=
+    0`` returns None and runs no job."""
+    if max_rows <= 0:
+        return None
+    rows = df.coalesce(1).limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
 
 
 def build_spark(
