@@ -3,7 +3,8 @@
 - every `tools/<name>.py` the docs tell a reader to run must exist;
 - bench.py's query lists must name catalog queries, so renaming a
   catalog query fails here instead of in the middle of a bench run;
-- `session.small_rows` is the engine's only bounded-collect size gate.
+- `session.small_rows` is the engine's only bounded-collect size gate;
+- the persisted band index's layout lives only in `operators/dedup_ops.py`.
 """
 
 import re
@@ -48,3 +49,20 @@ def test_small_rows_is_the_only_bounded_collect():
         if probe.search(line)
     ]
     assert not hits, f"bounded collects outside session.small_rows: {hits}"
+
+
+def test_band_index_layout_lives_in_dedup_ops():
+    """The band rows and the index's `_kp` / `_ip` partition columns
+    have one home; another module spelling them out is a second copy of
+    the layout — route it through `dedup_ops.write_band_index` and
+    `dedup_ops.probe_band_index`."""
+    probe = re.compile(r"[\"']_kp[\"']|[\"']_ip[\"']|_minhash_band_rows")
+    pkg = ROOT / "voter_gateway_spark"
+    hits = [
+        f"{p.relative_to(ROOT)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "operators" / "dedup_ops.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if probe.search(line)
+    ]
+    assert not hits, f"band-index layout outside dedup_ops: {hits}"

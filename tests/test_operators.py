@@ -203,6 +203,24 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
 
 
+def test_minhash_signature_has_no_null_element(spark):
+    """The band-key precondition: NULL, empty and whitespace-only texts
+    all shingle to the one '' shingle, so minhash_signature never sees
+    an empty hash set and no signature element — hence no packed band
+    key — is NULL."""
+    df = spark.createDataFrame(
+        [Row(id=1, t=None), Row(id=2, t=""), Row(id=3, t="   "), Row(id=4, t="word")],
+        "id bigint, t string",
+    )
+    rows = {r._id: r for r in dedup_ops.minhash_hashed_sigs(df, "id", "t").collect()}
+    assert sorted(rows) == [1, 2, 3, 4]
+    for r in rows.values():
+        assert r._sig is not None and len(r._sig) == 16
+        assert None not in r._sig
+        assert len(r._hh) == 1
+    assert rows[1]._hh == rows[2]._hh == rows[3]._hh != rows[4]._hh
+
+
 def test_simhash_near_dups(spark):
     df = spark.createDataFrame(
         [
@@ -1344,6 +1362,114 @@ def test_band_index_auto_prefix_zero_roundtrip(spark, sf_dir, tmp_path):
     g = {(r.new_id, r.corpus_id, r.jaccard) for r in got.collect()}
     e = {(r.new_id, r.corpus_id, r.jaccard) for r in exp.collect()}
     assert g == e and len(g) > 0
+
+
+def _band_index_texts():
+    """(corpus, admission batch, probe batch) rows for the persisted
+    band-index round trip: exact and near duplicates across all three,
+    plus NULL, empty and whitespace-only texts."""
+    words = "amber basil cedar delta ember fjord grove harbor island jasper kestrel lumen".split()
+
+    def text(seed: int, swap: int | None = None) -> str:
+        ws = [f"{w}{seed}" for w in words]
+        if swap is not None:
+            ws[swap] = f"other{seed}"
+        return " ".join(ws)
+
+    corpus = [(i, text(i)) for i in range(1, 9)] + [
+        (9, text(1)),  # exact duplicates inside the corpus
+        (10, text(2)),
+        (11, text(3, swap=11)),  # near duplicates inside the corpus
+        (12, text(4, swap=0)),
+        (13, None),
+        (14, ""),
+        (15, "   "),
+        (16, "single"),
+        (17, text(17)),
+        (18, text(18)),
+    ]
+    admit = [
+        (101, text(5)),  # exact duplicate of the corpus: rejected
+        (102, text(6, swap=11)),
+        (103, text(103)),
+        (104, text(104)),
+        (105, None),  # degenerate text: an exact duplicate of 13-15
+        (106, text(106, swap=5)),
+    ]
+    probe = [
+        (201, text(103, swap=11)),  # near duplicates of admitted docs
+        (202, text(104)),  # exact duplicate of an admitted doc
+        (203, text(7, swap=0)),
+        (204, ""),
+        (205, text(205)),
+        (206, text(1)),
+        (207, "   "),
+        (208, text(106)),
+    ]
+    return corpus, admit, probe
+
+
+@pytest.mark.parametrize("prefix_len", [1, None])
+def test_band_index_packed_layout_roundtrip_with_append(spark, tmp_path, prefix_len):
+    """The persisted index stores the packed band rows: a build, one
+    plain admit_batch append and a probe of a third batch equal the
+    in-memory incremental probe against corpus + admitted docs, on the
+    prefixed layout and on the auto (prefix_len=0) one, at threshold
+    0.0 (every band collision) and 0.3. An index with the older string
+    band key is rejected."""
+    from voter_gateway_spark.streaming.index_dedup import admit_batch
+
+    schema = "doc_id bigint, text string"
+    corpus_rows, admit_rows, probe_rows = _band_index_texts()
+    corpus = spark.createDataFrame(corpus_rows, schema)
+    idx, cpath = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    corpus.write.parquet(cpath)
+    dedup_ops.build_band_index(corpus, idx, "doc_id", "text", prefix_len=prefix_len)
+    admitted = admit_batch(
+        spark, spark.createDataFrame(admit_rows, schema), idx, cpath,
+        "doc_id", "text", intra_batch=False,
+    )
+    admitted_ids = {r.doc_id for r in admitted.collect()}
+    assert 101 not in admitted_ids and {103, 104, 106} <= admitted_ids
+
+    plen = spark.read.parquet(f"{idx}/meta").collect()[0].prefix_len
+    assert plen == (prefix_len or 0)
+    bands = spark.read.parquet(f"{idx}/bands")
+    assert {"corpus_id", "_b", "_k0", "_k1"} <= set(bands.columns)
+    assert "_k" not in bands.columns
+    if plen:
+        kps = {r._kp for r in bands.select("_kp").distinct().collect()}
+        assert kps and all(len(kp) == plen and set(kp) <= set("0123456789abcdef") for kp in kps)
+
+    batch = spark.createDataFrame(probe_rows, schema)
+    grown = spark.read.parquet(cpath)
+    for threshold in (0.0, 0.3):
+        got = {
+            (r.new_id, r.corpus_id, r.jaccard)
+            for r in dedup_ops.probe_band_index(
+                spark, idx, batch, "doc_id", "text", threshold=threshold
+            ).collect()
+        }
+        exp = {
+            (r.new_id, r.corpus_id, r.jaccard)
+            for r in dedup_ops.incremental_minhash_pairs(
+                batch, grown, "doc_id", "text", threshold=threshold
+            ).collect()
+        }
+        assert got == exp
+        # the appended rows are probed, and degenerate texts pair
+        assert any(c in admitted_ids for _, c, _ in got)
+        assert (204, 13) in {(n, c) for n, c, _ in got}
+
+    old = tmp_path / "old_idx"
+    spark.read.parquet(f"{idx}/meta").write.parquet(str(old / "meta"))
+    spark.createDataFrame([(1, 0, "1|2|3|4")], "corpus_id bigint, _b int, _k string").write.partitionBy(
+        "_b"
+    ).parquet(str(old / "bands"))
+    with pytest.raises(ValueError, match="build_band_index"):
+        dedup_ops.probe_band_index(spark, str(old), batch, "doc_id", "text")
+    with pytest.raises(ValueError, match="bootstrap_index"):
+        admit_batch(spark, batch, str(old), cpath, "doc_id", "text", intra_batch=False)
 
 
 def test_ivf_lloyd_partition_count_invariant(spark, sf_dir):

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.operators.skew import widen
-from voter_gateway_spark.session import Py4JError, ckpt, ckpt_lazy, ckpt_parallel, small_rows
+from voter_gateway_spark.session import Py4JError, ckpt, ckpt_defer, ckpt_lazy, small_rows
 
 
 def _c(col: Column | str) -> Column:
@@ -93,6 +93,24 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+def _verified_pairs(
+    cand: DataFrame, a: str, b: str, ha: DataFrame, hb: DataFrame, threshold: float
+) -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs in `cand` (columns `a`,
+    `b`) whose exact Jaccard, rounded to 6 places, is >= threshold —
+    the one verification rule of every blocked Jaccard producer, and
+    the rule their DuckDB oracles mirror. `ha` / `hb` are the (_id,
+    _hh) hash-set frames of the a and b sides; banding and prefix
+    filtering only choose candidates, so they affect recall, never
+    precision."""
+    return (
+        cand.join(ha.select(F.col("_id").alias(a), F.col("_hh").alias("_sha")), a)
+        .join(hb.select(F.col("_id").alias(b), F.col("_hh").alias("_shb")), b)
+        .select(a, b, F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def _collapse_exact(
     full: DataFrame,
     materialize: bool,
@@ -123,36 +141,23 @@ def _collapse_exact(
     oracle mirrors it as array_to_string(list_sort(hl), ',') without
     depending on either engine's distinct-preserving order).
 
-    r15 optimization (guide §2.4 "remove shuffles outright"): the r13
-    shape derived reps with a groupBy(_fp) + join-back to `full` — two
-    exchanges, and with materialize=True THREE eager checkpoint
-    barriers. Since r15 this is ONE window pass (hash-exchange by
-    _fp) feeding ONE materialization that every branch reads.
+    Plan shape: ONE window pass (hash-exchange by the fingerprint
+    `_fp`) feeds ONE materialization that every branch reads; there is
+    no groupBy + join-back.
 
-    r16 skew-hardening (guide §2.5/§5 — the r15 VERDICT's "what's
-    wrong" #2): the r15 window carried each group's full member-id
-    array on its rep row (`collect_list` over an unbounded frame) and
-    `expand` re-listed pairs with a nested in-row explode — both put
-    an ENTIRE duplicate group (or d×e pair block) in one row / one
-    task, which OOMs or serializes on crawl-skew groups (a million-way
-    duplicated boilerplate doc ⇒ a 10⁶-element array on one row and a
-    10¹²-row single-task explode). The materialized frame is now
-    ROWS-NOT-ARRAYS: every row carries its group REPRESENTATIVE id
-    (`_rep` = running `first(_id)` over the same ordered window — a
-    streaming frame, so the window buffers nothing), members/spanning/
-    membership derive row-per-member with no per-group structure
-    anywhere, and `expand` rebuilds the pair multiset with ordinary
-    joins on `_rep` (distributed; AQE skew-split applies). Exchange
-    count is unchanged (the one hash-by-_fp window exchange); no
-    construct is group-sized, so no group-size probe or fallback
-    branch is needed — the guard is structural.
+    No construct is group-sized. The materialized frame holds rows,
+    not arrays: every row carries its group representative id (`_rep`
+    = running `first(_id)` over the ordered window — a streaming
+    frame, so the window buffers nothing). members, spanning and
+    membership derive row-per-member, and `expand` rebuilds the pair
+    multiset with ordinary joins on `_rep` (distributed; AQE can
+    skew-split them). A million-way duplicated document therefore
+    costs one row per member — never a 10⁶-element array on one row
+    or a d×e single-task explode — so no group-size probe or fallback
+    branch is needed.
 
-    Null-id contract (r15 ADVICE): rows with NULL `_id` are dropped at
-    entry. This is exactly the r13 groupBy+join-back semantics (min()
-    ignored nulls and the join-back on `_id` dropped null rows from
-    every output); the r15 window form silently ELECTED a null row as
-    rep (asc-nulls-first) while collect_list dropped it from `_mem` —
-    hash-green on null-free fixtures but divergent on null ids.
+    Null ids: rows with NULL `_id` are dropped at entry, so a null id
+    is never elected representative and never appears in any output.
     Pinned by tests/test_collapse_windowed.py::test_null_ids_dropped.
 
     Unique-id precondition: non-null `_id` values must be unique. The
@@ -161,12 +166,15 @@ def _collapse_exact(
     each one multiplies through the band join, verification and
     `expand`. Nothing here checks it: the id column must be a key.
 
-    `stage`: optional callable applied to the full row frame BEFORE
-    materialization, so callers stage derived per-rep columns (e.g.
-    the MinHash signature) into the same single checkpoint. `_hh` is
-    NULL on non-rep rows (each group's hash set is stored once), so
-    staged expressions should be guarded with `_id == _rep` when they
-    are nontrivial.
+    `stage`: optional callable applied to the full row frame (with
+    `_rep` and `_n`) BEFORE materialization, so callers stage derived
+    per-rep columns (e.g. the MinHash signature) into the same single
+    checkpoint; guard nontrivial staged expressions with `_id == _rep`.
+    Only after the stage is `_hh` nulled on non-rep rows (each group's
+    hash set is stored once). The order matters for cost: the
+    16-permutation signature over the nulled `_hh` runs measurably
+    slower (same jobs, one extra projection) than over the window's
+    own `_hh`.
 
     Returns (members, reps, expand, spanning, grouped):
     - members: (_id, _rep, _n) — one row per non-null-id input row;
@@ -186,10 +194,10 @@ def _collapse_exact(
         .withColumn("_rep", F.first("_id").over(w_ord))
         .drop("_fp")
         .withColumn("_n", F.size("_hh"))
-        .withColumn("_hh", F.when(F.col("_id") == F.col("_rep"), F.col("_hh")))
     )
     if stage is not None:
         rows = stage(rows)
+    rows = rows.withColumn("_hh", F.when(F.col("_id") == F.col("_rep"), F.col("_hh")))
     if materialize:
         rows = rows.transform(ckpt)
     grouped = rows.where(F.col("_id") == F.col("_rep"))
@@ -294,12 +302,12 @@ def _ngram_graph(
     the same way, so even a collision — ~n²/2^60 — is mirrored).
     Returns (members, reps, rep_pairs, expand, spanning, grouped)."""
     full = widen(df).select(
-        F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh")
-    ).select("_id", F.array_distinct(F.transform("_sh", shingle_hash60)).alias("_hh"))
-    # no checkpoint of `full` here: the windowed _collapse_exact is its
-    # single consumer and materializes the one rep frame every branch
-    # (candidates, verification, spanning/expand) reads — 3 eager
-    # barriers -> 1 per call (r15 optimization)
+        F.col(id_col).alias("_id"), shingle_hash_set(text_col, k).alias("_hh")
+    )
+    # no checkpoint of `full` here: _collapse_exact is its single
+    # consumer and materializes the one rep frame every branch
+    # (candidates, verification, spanning/expand) reads — one eager
+    # barrier per call
     members, reps, expand, spanning, grouped = _collapse_exact(
         full, materialize, "jaccard", 1.0
     )
@@ -336,16 +344,7 @@ def _ngram_graph(
             .dropDuplicates(["id_a", "id_b"])
         )
         # exact verification on the (small, blocked) candidate set
-        rep_pairs = (
-            cand.join(base.select(F.col("_id").alias("id_a"), F.col("_hh").alias("_sha")), "id_a")
-            .join(base.select(F.col("_id").alias("id_b"), F.col("_hh").alias("_shb")), "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
+        rep_pairs = _verified_pairs(cand, "id_a", "id_b", base, base, threshold)
         return members, reps, rep_pairs, expand, spanning, grouped
     # low thresholds: full inverted-index join; intersection size = pair
     # count (arrays are distinct), so only (id, id) tuples shuffle —
@@ -479,6 +478,16 @@ def shingle_hash60(s: Column) -> Column:
     return md5_hash60(s)
 
 
+def shingle_hash_set(col: Column | str, k: int = 3) -> Column:
+    """The distinct 60-bit hashes of a text's word k-shingles
+    (array<bigint>): the hash SET every Jaccard and MinHash consumer
+    reads. Jaccard over these sets equals Jaccard over the shingle
+    sets up to 60-bit collisions, which the oracles mirror by hashing
+    the same way. NULL, empty and whitespace-only texts all give the
+    one-element set of the '' shingle, never an empty set."""
+    return F.array_distinct(F.transform(word_shingles(col, k), shingle_hash60))
+
+
 def minhash_signature(hashes: Column, n_hashes: int = 16) -> Column:
     """n-permutation MinHash over pre-computed shingle hashes: one md5
     per shingle (NOT per seed — 16× cheaper), then n affine permutations
@@ -495,35 +504,6 @@ def minhash_signature(hashes: Column, n_hashes: int = 16) -> Column:
     return F.array(*sigs)
 
 
-def _minhash_band_rows(base: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Explode a (_id, _sig) frame into (_id, _b, _k) LSH band rows —
-    band keys ride as compact strings. This is the PERSISTED-index
-    form (build_band_index stores `_k` and md5-prefixes it for the
-    partition layout); in-memory band joins use
-    :func:`_minhash_band_rows_packed` instead, which shuffles the same
-    information as fixed-width ints (guide §2.3)."""
-    return base.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at("_sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band"),
-    ).select("_id", F.col("_band.band").alias("_b"), F.col("_band.key").alias("_k"))
-
-
 def _n_band_keys(rows_per_band: int) -> int:
     return (rows_per_band + 1) // 2
 
@@ -534,18 +514,16 @@ def _minhash_band_rows_packed(
     """(_id, _b, _k0.._k{m-1}) LSH band rows with the band's signature
     slice PACKED into m = ceil(rows_per_band/2) bigints, two values per
     word (signature values are mod 2^31-1, so 31 bits each; lo<<31|hi
-    stays under 2^62 — no ANSI overflow). For non-null slices this is
-    a bijection of the string key `_minhash_band_rows` builds, so the
-    candidate sets are identical, but the default 4-row band shuffles
-    16 bytes of key instead of a ~40-byte concat-ws string (guide §2.3
-    "shuffle fewer bytes / narrower types").
+    stays under 2^62 — no ANSI overflow). This is the ONE band form:
+    in-memory band joins and the persisted band index both key on it,
+    and the default 4-row band shuffles 16 bytes of key.
 
-    NULL slices differ: a NULL signature element (null or degenerate
-    text) makes its packed key NULL, so the row drops out of the
-    equi-join, while the string form's concat_ws skips the null and
-    still keys the row. The two forms give the same OUTPUT only
-    because exact-Jaccard verification filters those pairs at
-    threshold > 0; at threshold=0.0 they would diverge."""
+    Invariant: no signature element is NULL, so no packed key is NULL
+    and every row takes part in the equi-join. Every text, including
+    NULL, empty and whitespace-only ones, shingles to a non-empty hash
+    set (see shingle_hash_set), so minhash_signature never sees an
+    empty set. Pinned by tests/test_operators.py::
+    test_minhash_signature_has_no_null_element."""
     def band_keys(b: int) -> list[Column]:
         ks = []
         for j in range(0, rows_per_band, 2):
@@ -594,15 +572,40 @@ def minhash_hashed_sigs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, n_hashes: int = 16
 ) -> DataFrame:
     """(_id, _hh, _sig): distinct 60-bit shingle hashes + MinHash
-    signature per row — the reusable front half of every MinHash
-    consumer (self-join LSH, incremental batch-vs-corpus, persisted
-    band index)."""
+    signature per row — the front half of the persisted band index
+    (build, probe and admission). The in-memory producers collapse
+    exact duplicates first (_signed_collapse)."""
     return (
         widen(df)
-        .select(F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh"))
-        .select("_id", F.array_distinct(F.transform("_sh", shingle_hash60)).alias("_hh"))
+        .select(F.col(id_col).alias("_id"), shingle_hash_set(text_col, k).alias("_hh"))
         .select("_id", "_hh", minhash_signature(F.col("_hh"), n_hashes).alias("_sig"))
         .transform(ckpt)
+    )
+
+
+def _signed_collapse(
+    df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int
+):
+    """The front half of the in-memory MinHash producers: shingle hash
+    sets, exact-duplicate collapse and signatures in ONE eager
+    checkpoint. Returns _collapse_exact's (members, reps, expand,
+    spanning, grouped), with the MinHash signature `_sig` staged on the
+    representative rows of `grouped` (NULL elsewhere, like `_hh`)."""
+    full = widen(df).select(
+        F.col(id_col).alias("_id"), shingle_hash_set(text_col, k).alias("_hh")
+    )
+    return _collapse_exact(
+        full,
+        True,
+        "jaccard",
+        1.0,
+        stage=lambda g: g.withColumn(
+            "_sig",
+            F.when(
+                F.col("_id") == F.col("_rep"),
+                minhash_signature(F.col("_hh"), n_hashes),
+            ),
+        ),
     )
 
 
@@ -635,100 +638,45 @@ def incremental_minhash_pairs(
     oracle reproduces the banding bit-for-bit (md5-derived affine
     constants).
 
-    r13: the band join runs on exact-duplicate group REPRESENTATIVES
-    of BOTH sides (signatures depend only on the hash set, so a
-    member collides iff its rep does — lossless), then the output is
-    rebuilt by membership joins: a d_b-duplicated batch probing a
-    d_c-duplicated corpus pays the join once, not d_b·d_c times.
-    `expand_corpus=False` keeps the corpus side at representatives —
-    (new_id, corpus_rep, jaccard), one row per new doc per matched
-    corpus GROUP: exact for admission (every matching new_id appears)
-    and for incremental_component_assign (the rep is a corpus id in
-    the cluster map, and collapsed self-join maps put every member in
-    its rep's component), while the corpus duplication factor drops
-    out of the OUTPUT too.
+    The band join runs on exact-duplicate group representatives of
+    BOTH sides (each side through _collapse_exact; signatures depend
+    only on the hash set, so a member collides iff its rep does —
+    lossless), and the verified rep-level pairs expand back to member
+    ids by joins on the rep key after the threshold: a d_b-duplicated
+    batch probing a d_c-duplicated corpus pays the join once, not
+    d_b·d_c times. `expand_corpus=False` keeps the corpus side at
+    representatives — (new_id, corpus_rep, jaccard), one row per new
+    doc per matched corpus GROUP: exact for admission (every matching
+    new_id appears) and for incremental_component_assign (the rep is
+    a corpus id in the cluster map, and collapsed self-join maps put
+    every member in its rep's component), while the corpus
+    duplication factor drops out of the OUTPUT too.
 
-    r14: the collapse costs the SAME job structure as the plain r12
-    shape — one eager checkpoint per side (window-derived reps; the
-    r13 groupBy+join-back form's four extra jobs regressed the sf0.1
-    catalog row 1.23 s → 2.4 s).
-
-    r16 skew-hardening (guide §2.5/§5, same change as _collapse_exact):
-    each side's one materialization now holds ROWS-NOT-ARRAYS — every
-    row tagged in-plan with its group representative (`_rep` = running
-    first(_id) over the _fp window, a streaming frame), signatures
-    computed on rep rows ONLY (the r15 form computed them on every row
-    and then discarded the non-reps — §1.2 "don't compute things you
-    throw away"), and the verified rep-level pairs expand back to
-    member ids by joins on the 8-byte rep key AFTER the jaccard
-    threshold (rp is pair-bounded and AQE broadcast-joins it when
-    small). No row carries its duplicate group, so a crawl-skew
-    million-way group costs one row per member, never a 10⁶-element
-    array or a d×e single-task explode. Null-id rows are dropped at
-    entry (same contract as _collapse_exact — the r13 join-back
-    semantics)."""
+    Both sides' collapse frames are materialized in ONE job (one
+    ckpt_defer batch, which joins the caller's batch when one is
+    open). No row carries its duplicate group, so a million-way group
+    costs one row per member. The _collapse_exact preconditions hold
+    on each side: non-null ids must be unique, and null-id rows are
+    dropped at entry."""
     rows_per_band = n_hashes // bands
-    fp = F.md5(
-        F.concat_ws(
-            ",", F.transform(F.sort_array(F.col("_hh")), lambda h: h.cast("string"))
-        ).cast("binary")
-    )
-    w_ord = Window.partitionBy("_fp").orderBy("_id")
-
-    def rep_sigs(df: DataFrame) -> DataFrame:
-        return (
-            widen(df)
-            .where(F.col(id_col).isNotNull())
-            .select(F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh"))
-            .select(
-                "_id", F.array_distinct(F.transform("_sh", shingle_hash60)).alias("_hh")
-            )
-            .withColumn("_fp", fp)
-            .withColumn("_rep", F.first("_id").over(w_ord))
-            .drop("_fp")
-            .withColumn(
-                "_sig",
-                F.when(
-                    F.col("_id") == F.col("_rep"),
-                    minhash_signature(F.col("_hh"), n_hashes),
-                ),
-            )
-            .withColumn(
-                "_hh", F.when(F.col("_id") == F.col("_rep"), F.col("_hh"))
-            )
+    with ckpt_defer():
+        nrows, nreps, _, _, ngrouped = _signed_collapse(
+            new_df, id_col, text_col, k, n_hashes
         )
-
-    # the two sides are independent — one materialization job
-    # (guide §2.6) instead of two sequential barriers
-    nrows, crows = ckpt_parallel([rep_sigs(new_df), rep_sigs(corpus_df)])
-    nreps = nrows.where(F.col("_id") == F.col("_rep"))
-    creps = crows.where(F.col("_id") == F.col("_rep"))
-    nk = _n_band_keys(rows_per_band)
+        crows, creps, _, _, cgrouped = _signed_collapse(
+            corpus_df, id_col, text_col, k, n_hashes
+        )
     cand = (
-        _minhash_band_rows_packed(nreps, bands, rows_per_band)
+        _minhash_band_rows_packed(ngrouped, bands, rows_per_band)
         .alias("a")
         .join(
-            _minhash_band_rows_packed(creps, bands, rows_per_band).alias("b"),
-            _band_join_cond(nk),
+            _minhash_band_rows_packed(cgrouped, bands, rows_per_band).alias("b"),
+            _band_join_cond(_n_band_keys(rows_per_band)),
         )
         .select(F.col("a._id").alias("_nr"), F.col("b._id").alias("_cr"))
         .dropDuplicates(["_nr", "_cr"])
     )
-    rp = (
-        cand.join(
-            nreps.select(F.col("_id").alias("_nr"), F.col("_hh").alias("_sha")),
-            "_nr",
-        )
-        .join(
-            creps.select(F.col("_id").alias("_cr"), F.col("_hh").alias("_shb")),
-            "_cr",
-        )
-        .select(
-            "_nr", "_cr",
-            F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    rp = _verified_pairs(cand, "_nr", "_cr", nreps, creps, threshold)
     # new side always expands (admission must see every arriving id) —
     # a join on the rep key against the threshold-filtered pair set
     out = rp.join(
@@ -766,58 +714,27 @@ def minhash_lsh_pairs(
     listing for consumers whose semantics is the pair multiset itself.
     """
     rows_per_band = n_hashes // bands
-    full = (
-        widen(df)
-        .select(F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh"))
-        .select("_id", F.array_distinct(F.transform("_sh", shingle_hash60)).alias("_hh"))
-    )
     # exact-dup collapse: identical shingle sets share all bands, so d
-    # copies would cost d² in the band join — see _collapse_exact. The
-    # MinHash signature is STAGED into the collapse's single
-    # materialization (guarded to rep rows — _hh is NULL elsewhere),
-    # so the whole front half — shingle pass, collapse, signatures —
-    # costs ONE eager barrier where the r13 shape paid four.
-    members, reps, expand, spanning, grouped = _collapse_exact(
-        full,
-        True,
-        "jaccard",
-        1.0,
-        stage=lambda g: g.withColumn(
-            "_sig",
-            F.when(
-                F.col("_id") == F.col("_rep"),
-                minhash_signature(F.col("_hh"), n_hashes),
-            ),
-        ),
+    # copies would cost d² in the band join — see _collapse_exact
+    members, reps, expand, spanning, grouped = _signed_collapse(
+        df, id_col, text_col, k, n_hashes
     )
-    emit = expand if expand_pairs else spanning
-    base = grouped.select("_id", "_hh", "_sig")
-    # band keys shuffle as packed bigints (guide §2.3); candidate pairs
-    # carry ids only, then the (small, blocked) candidate set joins the
-    # shingle arrays back for exact verification
-    nk = _n_band_keys(rows_per_band)
-    banded = _minhash_band_rows_packed(base, bands, rows_per_band)
+    # band keys shuffle as packed bigints; candidate pairs carry ids
+    # only, then the (small, blocked) candidate set joins the hash sets
+    # back for exact verification
+    banded = _minhash_band_rows_packed(grouped, bands, rows_per_band)
     cand = (
         banded.alias("a")
         .join(
             banded.alias("b"),
-            _band_join_cond(nk) & (F.col("a._id") < F.col("b._id")),
+            _band_join_cond(_n_band_keys(rows_per_band))
+            & (F.col("a._id") < F.col("b._id")),
         )
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # exact verification on the distinct hash sets (== shingle-set
-    # Jaccard; the oracle hashes identically)
-    sh = base.select("_id", "_hh")
-    rep_pairs = (
-        cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_hh").alias("_sha")), "id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_hh").alias("_shb")), "id_b")
-        .select(
-            "id_a", "id_b", F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard")
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return emit(rep_pairs)
+    rep_pairs = _verified_pairs(cand, "id_a", "id_b", reps, reps, threshold)
+    return (expand if expand_pairs else spanning)(rep_pairs)
 
 
 # -- connected components ------------------------------------------------------
@@ -1125,10 +1042,7 @@ def cross_corpus_overlap(
     """
     def hashed(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(
-                F.transform(word_shingles(text_col, k), shingle_hash60)
-            ).alias("_hh"),
+            F.col(id_col).alias("_id"), shingle_hash_set(text_col, k).alias("_hh")
         )
 
     ev = hashed(eval_df)
@@ -1297,6 +1211,53 @@ def hamming_band_pairs(
     )
 
 
+def _key_prefix(nk: int, prefix_len: int) -> Column:
+    """`_kp`: the lowercase hex prefix, `prefix_len` chars long, of the
+    md5 of a packed band row's keys _k0.._k{nk-1} — the band dataset's
+    bucket partition column, on the index and probe sides alike."""
+    keys = F.concat_ws("|", *[F.col(f"_k{i}").cast("string") for i in range(nk)])
+    return F.substring(F.md5(keys.cast("binary")), 1, prefix_len)
+
+
+def _id_prefix(col: str, prefix_len: int) -> Column:
+    """`_ip`: the md5 hex prefix of an id — the hashes dataset's bucket
+    partition column."""
+    return F.substring(F.md5(F.col(col).cast("string").cast("binary")), 1, prefix_len)
+
+
+def write_band_index(
+    signed: DataFrame,
+    bands_dir: str,
+    hashes_dir: str,
+    mode: str,
+    prefix_len: int,
+    n_hashes: int,
+    bands: int,
+) -> None:
+    """Write the `bands` and `hashes` datasets of a persisted band index
+    (see build_band_index) for a signed (_id, _hh, _sig) frame, in
+    write `mode` ("overwrite" or "append"). The one writer of the
+    layout: build_band_index and admission's staged and appending
+    writes all go through it.
+
+    With prefix_len=0 there are no _kp/_ip partition directories; an
+    append must mirror the layout meta records, because conflicting
+    partition columns in one dataset make every later read fail."""
+    rows_per_band = n_hashes // bands
+    b_out = _minhash_band_rows_packed(signed, bands, rows_per_band).withColumnRenamed(
+        "_id", "corpus_id"
+    )
+    h_out = signed.select(F.col("_id").alias("corpus_id"), F.col("_hh").alias("_shb"))
+    b_parts, h_parts = ["_b"], []
+    if prefix_len > 0:
+        b_out = b_out.withColumn("_kp", _key_prefix(_n_band_keys(rows_per_band), prefix_len))
+        h_out = h_out.withColumn("_ip", _id_prefix("corpus_id", prefix_len))
+        b_parts.append("_kp")
+        h_parts.append("_ip")
+    b_out.write.mode(mode).partitionBy(*b_parts).parquet(bands_dir)
+    h_out.write.mode(mode).partitionBy(*h_parts).parquet(hashes_dir)
+
+
 def build_band_index(
     corpus_df: DataFrame,
     path: str,
@@ -1320,10 +1281,12 @@ def build_band_index(
 
     Writes three datasets under `path`:
 
-    - `bands`: (corpus_id, _k) PARTITIONED BY (_b, _kp) where _kp is a
-      `prefix_len`-hex-char md5 prefix of the band key — 16^prefix_len
-      directories per band. A batch probe only touches the (band,
-      prefix) partitions its own keys fall in.
+    - `bands`: (corpus_id, _b, _k0.._k{m-1}) — the packed band rows
+      the in-memory probes join on (`_minhash_band_rows_packed`) —
+      PARTITIONED BY (_b, _kp) where _kp is a `prefix_len`-hex-char
+      md5 prefix of the packed keys — 16^prefix_len directories per
+      band. A batch probe only touches the (band, prefix) partitions
+      its own keys fall in.
     - `hashes`: (corpus_id, _shb) — the distinct 60-bit shingle sets
       for exact Jaccard verification — PARTITIONED BY _ip (md5 prefix
       of the id), so the verify join scans only the candidates'
@@ -1331,6 +1294,10 @@ def build_band_index(
     - `meta`: one row of (k, n_hashes, bands, prefix_len); the probe
       reads its parameters from here so signatures always agree with
       the build.
+
+    `write_band_index` writes `bands` and `hashes`; admission appends
+    through it too. An index whose `bands` hold the older string key
+    `_k` must be rebuilt: the probe rejects it.
 
     `prefix_len=None` (default) sizes the prefix from the corpus: the
     honest 500k-doc measurement showed a FIXED prefix_len=2 loses to
@@ -1351,27 +1318,10 @@ def build_band_index(
 
         n = corpus_df.count()
         prefix_len = min(3, max(0, int(math.log(max(n / target_bucket_rows, 1), 16))))
-    base = minhash_hashed_sigs(corpus_df, id_col, text_col, k, n_hashes)
-    rows = _minhash_band_rows(base, bands, n_hashes // bands)
-    b_out = rows.select(F.col("_id").alias("corpus_id"), "_b", "_k")
-    b_parts = ["_b"]
-    if prefix_len > 0:
-        b_out = b_out.withColumn(
-            "_kp", F.substring(F.md5(F.col("_k").cast("binary")), 1, prefix_len)
-        )
-        b_parts.append("_kp")
-    b_out.write.mode("overwrite").partitionBy(*b_parts).parquet(f"{path}/bands")
-    h_out = base.select(F.col("_id").alias("corpus_id"), F.col("_hh").alias("_shb"))
-    if prefix_len > 0:
-        h_out = h_out.withColumn(
-            "_ip",
-            F.substring(
-                F.md5(F.col("corpus_id").cast("string").cast("binary")), 1, prefix_len
-            ),
-        )
-        h_out.write.mode("overwrite").partitionBy("_ip").parquet(f"{path}/hashes")
-    else:
-        h_out.write.mode("overwrite").parquet(f"{path}/hashes")
+    write_band_index(
+        minhash_hashed_sigs(corpus_df, id_col, text_col, k, n_hashes),
+        f"{path}/bands", f"{path}/hashes", "overwrite", prefix_len, n_hashes, bands,
+    )
     corpus_df.sparkSession.createDataFrame(
         [(k, n_hashes, bands, prefix_len)],
         "k int, n_hashes int, bands int, prefix_len int",
@@ -1397,8 +1347,8 @@ def probe_band_index(
     2. collect the batch's DISTINCT (band, key-prefix) pairs — bounded
        by bands x 16^prefix_len literals (1024 at the defaults), NOT by
        batch size — and scan `bands` with that as a partition filter;
-    3. equi-join on (band, prefix, key) -> candidate (new_id,
-       corpus_id) pairs;
+    3. equi-join on the packed band keys (`_band_join_cond`) plus the
+       prefix -> candidate (new_id, corpus_id) pairs;
     4. collect the candidates' distinct id-prefixes (<= 16^prefix_len
        literals) and scan `hashes` pruned the same way for the exact
        Jaccard verification.
@@ -1410,61 +1360,60 @@ def probe_band_index(
     ~`target_bucket_rows`·16 docs), there are no prefix directories:
     the band scan prunes on _b only and the verify join streams the
     whole hashes dataset — the index still avoids re-signing the
-    corpus, which is the win that survives at every size."""
+    corpus, which is the win that survives at every size.
+
+    An index whose `bands` hold the older string key `_k` raises
+    ValueError before any work: the check reads only the schema of the
+    `bands` frame the probe opens anyway."""
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     plen = meta.prefix_len
-    nb = minhash_hashed_sigs(new_df, id_col, text_col, meta.k, meta.n_hashes)
-    nrows = _minhash_band_rows(nb, meta.bands, meta.n_hashes // meta.bands)
-    if plen > 0:
-        nrows = nrows.withColumn(
-            "_kp",
-            F.substring(F.md5(F.col("_k").cast("binary")), 1, plen),
+    rows_per_band = meta.n_hashes // meta.bands
+    nk = _n_band_keys(rows_per_band)
+    idx = spark.read.parquet(f"{path}/bands")
+    if "_k0" not in idx.columns:
+        raise ValueError(
+            f"band index at {path} holds string band keys (`_k`), a layout "
+            "this probe no longer reads; rebuild it with build_band_index "
+            "(or bootstrap_index)"
         )
+    nb = minhash_hashed_sigs(new_df, id_col, text_col, meta.k, meta.n_hashes)
+    nrows = _minhash_band_rows_packed(nb, meta.bands, rows_per_band)
+    join_on = _band_join_cond(nk)
+    if plen > 0:
+        nrows = nrows.withColumn("_kp", _key_prefix(nk, plen))
+        join_on = join_on & (F.col("a._kp") == F.col("b._kp"))
     nrows = nrows.transform(ckpt)
     if plen > 0:
-        probes = [
-            (r["_b"], r["_kp"]) for r in nrows.select("_b", "_kp").distinct().collect()
-        ]
-        pred = F.lit(False)
         by_band: dict[int, list[str]] = {}
-        for b, kp in probes:
-            by_band.setdefault(b, []).append(kp)
+        for r in nrows.select("_b", "_kp").distinct().collect():
+            by_band.setdefault(r["_b"], []).append(r["_kp"])
+        pred = F.lit(False)
         for b, kps in by_band.items():
             pred = pred | ((F.col("_b") == b) & F.col("_kp").isin(kps))
-        join_on = (
-            (F.col("a._b") == F.col("b._b"))
-            & (F.col("a._kp") == F.col("b._kp"))
-            & (F.col("a._k") == F.col("b._k"))
-        )
     else:
         bs = [r["_b"] for r in nrows.select("_b").distinct().collect()]
         pred = F.col("_b").isin(bs) if bs else F.lit(False)
-        join_on = (F.col("a._b") == F.col("b._b")) & (F.col("a._k") == F.col("b._k"))
-    idx = spark.read.parquet(f"{path}/bands").where(pred)
     cand = (
         nrows.alias("a")
-        .join(idx.alias("b"), join_on)
+        .join(idx.where(pred).alias("b"), join_on)
         .select(F.col("a._id").alias("new_id"), F.col("b.corpus_id").alias("corpus_id"))
         .dropDuplicates(["new_id", "corpus_id"])
         .transform(ckpt)
     )
     hashes = spark.read.parquet(f"{path}/hashes")
     if plen > 0:
-        ips = [r["_ip"] for r in cand.select(
-            F.substring(
-                F.md5(F.col("corpus_id").cast("string").cast("binary")), 1, plen
-            ).alias("_ip")
-        ).distinct().collect()]
+        ips = [
+            r["_ip"]
+            for r in cand.select(_id_prefix("corpus_id", plen).alias("_ip")).distinct().collect()
+        ]
         hashes = hashes.where(F.col("_ip").isin(ips) if ips else F.lit(False))
-    return (
-        cand.join(hashes.select("corpus_id", "_shb"), "corpus_id")
-        .join(nb.select(F.col("_id").alias("new_id"), F.col("_hh").alias("_sha")), "new_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return _verified_pairs(
+        cand,
+        "new_id",
+        "corpus_id",
+        nb,
+        hashes.select(F.col("corpus_id").alias("_id"), F.col("_shb").alias("_hh")),
+        threshold,
     )
 
 

@@ -11,10 +11,10 @@ Composes three existing pieces (no new dedup math):
 - `dedup_ops.probe_band_index` — batch-vs-corpus candidate pairs with
   exact Jaccard verification (recall governed by the banding, precision
   exact);
-- `dedup_ops.minhash_hashed_sigs` / `_minhash_band_rows` — the same
-  signature pipeline appends admitted docs' band rows to the index
-  (append-mode parquet into the same (band, key-prefix) partition
-  layout, so the next probe prunes over old + new alike);
+- `dedup_ops.minhash_hashed_sigs` / `write_band_index` — the index's
+  own signature pipeline and writer add admitted docs' packed band
+  rows and hash sets to the index (the same (band, key-prefix)
+  partition layout, so the next probe prunes over old + new alike);
 - foreachBatch — the Structured Streaming idiom for sinks with
   read-your-own-writes semantics (the built-in sinks can't express
   "filter against what I've already written").
@@ -68,11 +68,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.operators.dedup_ops import (
-    _minhash_band_rows,
     build_band_index,
     minhash_hashed_sigs,
     minhash_lsh_pairs,
     probe_band_index,
+    write_band_index,
 )
 from voter_gateway_spark.session import ckpt
 from voter_gateway_spark.streaming.upsert_sink import (
@@ -290,7 +290,11 @@ def admit_batch(
     exactly-once under crash/replay — staged writes, deterministic
     tagged file names, partial-commit undo, and an admission marker
     scoped to `query_id`'s lineage (see module docstring). Returns
-    None when the marker proves this batch already fully committed."""
+    None when the marker proves this batch already fully committed.
+
+    An index whose `bands` hold the older string band key raises the
+    probe's ValueError before anything is written: rebuild it with
+    `bootstrap_index`."""
     exactly_once = batch_id is not None
     if exactly_once:
         slug = _lineage_slug(query_id)
@@ -359,40 +363,17 @@ def admit_batch(
         admitted.write.mode("overwrite").parquet(c_stage)
     else:
         admitted.write.mode("append").parquet(corpus_path)
-    base = minhash_hashed_sigs(admitted, id_col, text_col, meta.k, meta.n_hashes)
-    rows = _minhash_band_rows(base, meta.bands, meta.n_hashes // meta.bands)
-    # appends must mirror the layout meta records: with the auto-sized
-    # prefix_len=0 build there are NO _kp/_ip partition directories —
-    # appending them would leave conflicting partition columns in one
-    # dataset and every later read fails
-    b_out = rows.select(F.col("_id").alias("corpus_id"), "_b", "_k")
-    b_parts = ["_b"]
-    if meta.prefix_len > 0:
-        b_out = b_out.withColumn(
-            "_kp",
-            F.substring(F.md5(F.col("_k").cast("binary")), 1, meta.prefix_len),
-        )
-        b_parts.append("_kp")
     b_stage = f"{index_path}/bands__stage_{slug}_b{batch_id}"
-    b_dest = b_stage if exactly_once else f"{index_path}/bands"
-    b_out.write.mode("overwrite" if exactly_once else "append").partitionBy(
-        *b_parts
-    ).parquet(b_dest)
-    h_out = base.select(F.col("_id").alias("corpus_id"), F.col("_hh").alias("_shb"))
     h_stage = f"{index_path}/hashes__stage_{slug}_b{batch_id}"
-    h_dest = h_stage if exactly_once else f"{index_path}/hashes"
-    h_mode = "overwrite" if exactly_once else "append"
-    if meta.prefix_len > 0:
-        h_out = h_out.withColumn(
-            "_ip",
-            F.substring(
-                F.md5(F.col("corpus_id").cast("string").cast("binary")),
-                1, meta.prefix_len,
-            ),
-        )
-        h_out.write.mode(h_mode).partitionBy("_ip").parquet(h_dest)
-    else:
-        h_out.write.mode(h_mode).parquet(h_dest)
+    write_band_index(
+        minhash_hashed_sigs(admitted, id_col, text_col, meta.k, meta.n_hashes),
+        b_stage if exactly_once else f"{index_path}/bands",
+        h_stage if exactly_once else f"{index_path}/hashes",
+        "overwrite" if exactly_once else "append",
+        meta.prefix_len,
+        meta.n_hashes,
+        meta.bands,
+    )
     if exactly_once:
         # manifest BEFORE the first rename: every destination any
         # rename could create is durably listed, so a crash at any
