@@ -163,9 +163,12 @@ def test_giant_group_stays_row_bounded(spark):
     assert widths < 50
 
 
-def test_incremental_minhash_null_and_expand_parity(spark):
+def test_incremental_minhash_null_and_expand_parity(spark, monkeypatch):
     """incremental_minhash_pairs' row form: member expansion by join
     equals the brute-force bipartite listing on a dup-heavy fixture."""
+    # the join form is the distributed path's; keep this small input off
+    # the driver path
+    monkeypatch.setattr(dedup_ops, "MINHASH_DRIVER_MAX_ROWS", 0)
     new_rows = [(10, "alpha beta gamma delta"), (11, "alpha beta gamma delta"),
                 (12, "totally new content here")]
     corpus_rows = [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),

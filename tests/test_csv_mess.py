@@ -200,3 +200,37 @@ def test_malformed_count_newline_byte_check(spark, tmp_path):
     src16.read(spark)
     with _pytest.raises(ValueError, match="0x0A"):
         src16.malformed_count()
+
+
+@pytest.mark.parametrize("slow_path", [False, True])
+def test_doubled_quotes_backslash_crlf_bom_read_like_copy_csv(spark, tmp_path, slow_path):
+    """Both read paths parse quoting like Postgres' COPY ... (FORMAT CSV,
+    QUOTE '^'), whose ESCAPE defaults to QUOTE, and like the header
+    parser (csv.reader): a doubled quote char inside a quoted field is
+    one literal quote char, also next to an embedded delimiter (the
+    field count stays right), and a backslash is an ordinary char.
+    CRLF line ends and a UTF-8 byte-order mark leave no trace in the
+    values or the header."""
+    from voter_gateway_spark.sources import CSVSource
+
+    body = (
+        "\ufeffid|name|n\r\n"
+        "1|^plain^|1\r\n"
+        "2|^say ^^hi^^^|456\r\n"
+        "3|^a^^|b^|789\r\n"
+        "4|^C:\\dir\\^|5\r\n"
+        "5|back\\slash|6\r\n"
+    )
+    path = _write(tmp_path, "quotes.csv", body)
+    src = CSVSource(path, delimiter="|", remove_malformed=slow_path)
+    df = src.read(spark)
+    assert df.columns == ["id", "name", "n"]
+    assert {r.id: (r.name, r.n) for r in df.collect()} == {
+        "1": ("plain", "1"),
+        "2": ("say ^hi^", "456"),
+        "3": ("a^|b", "789"),
+        "4": ("C:\\dir\\", "5"),
+        "5": ("back\\slash", "6"),
+    }
+    if slow_path:
+        assert src.malformed_count() == 0

@@ -3273,3 +3273,37 @@ def test_triangle_stats_hand_graph(spark):
     # node 2: degree 3 (0,1,3), one triangle -> 2*1/(3*2)
     assert got[2] == (3, 1, round(2 / 6, 6))
     assert got[3] == (1, 0, 0.0)
+
+
+# The MinHash producers finish inputs under MINHASH_DRIVER_MAX_ROWS on the
+# driver, so every parity test above that calls them on a small input
+# checks the driver path. These cases rerun those tests, unedited, with
+# the gate at 0: the distributed collapse, band join and verification
+# keep their real-data checks (incremental vs full run, band index vs
+# in-memory probe, collapsed vs expanded contract).
+MINHASH_PARITY_TESTS = {
+    f.__name__ + (f"[{kw['prefix_len']}]" if kw else ""): (f, kw)
+    for f, kw in (
+        (test_pair_producers_survive_short_docs, {}),
+        (test_minhash_lsh_finds_near_dups, {}),
+        (test_incremental_minhash_pairs_bipartite_only, {}),
+        (test_incremental_pairs_equal_full_run_cross_pairs, {}),
+        (test_band_index_roundtrip_matches_inmemory, {}),
+        (test_band_index_auto_prefix_zero_roundtrip, {}),
+        (test_band_index_packed_layout_roundtrip_with_append, {"prefix_len": 1}),
+        (test_band_index_packed_layout_roundtrip_with_append, {"prefix_len": None}),
+        (test_collapsed_contract_equivalence_minhash_simhash, {}),
+        (test_incremental_probe_corpus_collapsed_mode, {}),
+    )
+}
+
+
+@pytest.mark.parametrize("name", sorted(MINHASH_PARITY_TESTS))
+def test_minhash_parity_on_distributed_path(spark, sf_dir, tmp_path, monkeypatch, name):
+    import inspect
+
+    test, kw = MINHASH_PARITY_TESTS[name]
+    monkeypatch.setattr(dedup_ops, "MINHASH_DRIVER_MAX_ROWS", 0)
+    fixtures = {"spark": spark, "sf_dir": sf_dir, "tmp_path": tmp_path}
+    params = inspect.signature(test).parameters
+    test(**{p: fixtures[p] for p in params if p not in kw}, **kw)

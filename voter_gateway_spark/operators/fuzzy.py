@@ -21,16 +21,16 @@ candidate pool for pathological tokens.
 
 The claiming rounds (`fuzzy_claiming_rounds`) have two paths. A small
 residual — at most DRIVER_MAX_ROWS sources and targets together, as
-`session.small_rows` (the engine's one small-input gate) reports, an
-exact candidate fanout of at most DRIVER_MAX_PAIRS, unique non-null string
-or integral ids, trigram sets under 500 elements — is collected once
-and claimed on the driver with an in-memory inverted index; anything
-else runs the distributed rounds (probes, hazard guard, one checkpoint
-per round). Both return identical rows: the sets stay computed by
-`trigrams()` in Spark, the driver's similarity is the same IEEE
-division of the same integers, and the output is rounded by the same
-`F.round(…, 6)`. Why the size rule makes the claim order match is in
-`_driver_claims`.
+`session.small_sides` (the engine's small-input gate) reports, an
+exact candidate fanout of at most DRIVER_MAX_PAIRS, unique non-null
+integral or default-collation string ids, trigram sets under 500
+elements — is collected once and claimed on the driver with an
+in-memory inverted index; anything else runs the distributed rounds
+(probes, hazard guard, one checkpoint per round). Both return
+identical rows: the sets stay computed by `trigrams()` in Spark, the
+driver's similarity is the same IEEE division of the same integers,
+and the output is rounded by the same `F.round(…, 6)`. Why the size
+rule makes the claim order match is in `_driver_claims`.
 
 All Spark expressions are native Catalyst (no UDFs).
 """
@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from voter_gateway_spark.operators.skew import widen
-from voter_gateway_spark.session import ckpt, ckpt_lazy, small_rows
+from voter_gateway_spark.session import ckpt, ckpt_lazy, small_sides
 
 DEFAULT_THRESHOLD = 0.5  # fuzzy_merger.rb:5
 
@@ -640,13 +640,13 @@ def _driver_claims(
     """fuzzy_claiming_rounds on the driver, or None when the residual
     is not provably small.
 
-    `session.small_rows` collects both sides' ids and trigram sets (a
-    side-tagged union) in one bounded job. The driver path runs only
-    when every one of these holds; otherwise the caller runs the
-    distributed rounds and the bounded collect is the only waste:
-    - the union has at most DRIVER_MAX_ROWS rows;
-    - ids are string or integral, non-null and unique per side (the
-      distributed claim semantics assume them too);
+    `session.small_sides` collects both sides' ids and trigram sets in
+    one bounded job. The driver path runs only when every one of these
+    holds; otherwise the caller runs the distributed rounds and the
+    bounded collect is the only waste:
+    - small_sides' gate: at most DRIVER_MAX_ROWS rows together, integral
+      or default-collation string ids, unique per side;
+    - no id is NULL (the distributed claim semantics assume it too);
     - every trigram set has fewer than DRIVER_MAX_SET elements;
     - the exact candidate fanout is at most DRIVER_MAX_PAIRS.
 
@@ -663,34 +663,20 @@ def _driver_claims(
     distinct ratios differ by ≥ 1/997² > 1e-6 and round apart, while
     equal ratios are equal doubles (IEEE division is correctly
     rounded). The output goes through the same F.round(…, 6)."""
-    sid_type = unmatched.schema[source_id].dataType
-    tid_type = pool.schema[target_id].dataType
-    if not all(
-        isinstance(t, (T.IntegralType, T.StringType)) for t in (sid_type, tid_type)
-    ):
-        return None
-    names = [f"_g{i}" for i in range(len(columns))]
-    sets = [trigrams(c).alias(n) for c, n in zip(columns, names)]
-    rows = small_rows(
-        unmatched.select(F.lit(True).alias("_src"), F.col(source_id).alias("_sid"), *sets)
-        .unionByName(
-            pool.select(F.lit(False).alias("_src"), F.col(target_id).alias("_tid"), *sets),
-            allowMissingColumns=True,
-        ),
-        DRIVER_MAX_ROWS,
-    )
-    if rows is None:
+    sets = [trigrams(c).alias(f"_g{i}") for i, c in enumerate(columns)]
+    sides = small_sides([(unmatched, source_id), (pool, target_id)], sets, DRIVER_MAX_ROWS)
+    if sides is None:
         return None
     src: dict = {}
     tgt: dict = {}
-    for r in rows:
-        side, ident = (src, r["_sid"]) if r["_src"] else (tgt, r["_tid"])
-        if ident is None or ident in side:
-            return None
-        tg = [frozenset(r[n] or ()) for n in names]
-        if any(len(g) >= DRIVER_MAX_SET for g in tg):
-            return None
-        side[ident] = tg
+    for side, rows in zip((src, tgt), sides):
+        for ident, *gs in rows:
+            if ident is None:
+                return None
+            tg = [frozenset(g or ()) for g in gs]
+            if any(len(g) >= DRIVER_MAX_SET for g in tg):
+                return None
+            side[ident] = tg
     fanout = 0
     for i in range(len(columns)):
         t_n = Counter(g for v in tgt.values() for g in v[i])
@@ -727,8 +713,8 @@ def _driver_claims(
 
     schema = T.StructType(
         [
-            T.StructField(source_id, sid_type),
-            T.StructField(f"matched_{target_id}", tid_type),
+            T.StructField(source_id, unmatched.schema[source_id].dataType),
+            T.StructField(f"matched_{target_id}", pool.schema[target_id].dataType),
             T.StructField("similarity", T.DoubleType()),
             T.StructField("_fuzzy_column", T.StringType()),
         ]
@@ -762,9 +748,9 @@ def fuzzy_claiming_rounds(
 
     Two paths, identical output. A small residual (the gate in
     `_driver_claims`: at most DRIVER_MAX_ROWS rows by `session.
-    small_rows`, DRIVER_MAX_PAIRS candidate pairs, unique non-null
-    string/integral ids, trigram sets under DRIVER_MAX_SET) is
-    collected in one job and claimed on the driver;
+    small_sides`, DRIVER_MAX_PAIRS candidate pairs, unique non-null
+    integral or default-collation string ids, trigram sets under
+    DRIVER_MAX_SET) is collected in one job and claimed on the driver;
     its exact-similarity order equals the distributed path's 6-dp
     rounded order because every union is ≤ 997. Otherwise each round
     runs `top1_fuzzy_match` (dup-fanout probe, hazard guard) and a

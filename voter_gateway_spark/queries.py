@@ -7162,14 +7162,17 @@ def pipeline_daily_ingest(spark, sf_dir):
     ]
     for batch in batches:
         # one ckpt_defer batch per day (r15 VERDICT ask #5, guide
-        # §2.6): the three frames the day's probes materialize — the
-        # batch-side and corpus-side rep frames inside
-        # incremental_minhash_pairs plus the batch-internal collapse
-        # frame inside minhash_lsh_pairs — are mutually independent,
-        # so their barriers overlap in ONE materialization job
-        # instead of three sequential ones. `admitted` stays a lazy
-        # checkpoint shared by all three (persist-marked: computed
-        # once by the first job that reads it, reused by every stage).
+        # §2.6): on the distributed MinHash path the three frames the
+        # day's probes materialize — the batch-side and corpus-side
+        # rep frames inside incremental_minhash_pairs plus the
+        # batch-internal collapse frame inside minhash_lsh_pairs — are
+        # mutually independent, so their barriers overlap in ONE
+        # materialization job instead of three sequential ones. On a
+        # small day both probes take the driver path (one collect
+        # each, see incremental_minhash_pairs) and the batch holds no
+        # collapse frame. `admitted` stays a lazy checkpoint shared by
+        # every reader (persist-marked: computed once by the first job
+        # that reads it, reused by every stage).
         with ckpt_defer():
             admitted = ckpt_lazy(
                 dedup_ops.bloom_admission(

@@ -16,8 +16,9 @@ from contextlib import contextmanager
 from functools import reduce
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 try:  # re-exported for the operators' Connect fallbacks (dedup_ops, skew)
     from py4j.protocol import Py4JError
@@ -190,6 +191,49 @@ def small_rows(df: DataFrame, max_rows: int) -> list[Row] | None:
         return None
     rows = df.coalesce(1).limit(max_rows + 1).collect()
     return rows if len(rows) <= max_rows else None
+
+
+def small_sides(
+    sides: list[tuple[DataFrame, str]], columns: list[Column], max_rows: int
+) -> list[list[tuple]] | None:
+    """Each side's ``(id, *columns)`` rows, for the driver paths that
+    pair two frames (or one with itself), or None when the input is not
+    theirs to finish. ``sides`` holds ``(frame, id column)``; every
+    aliased Column in ``columns`` is projected on every side. None
+    unless all of these hold:
+    - each id column is integral or a default-collation string, whose
+      order and equality Python shares (checked before any job);
+    - all sides together have at most ``max_rows`` rows (one
+      ``small_rows`` job over a side-tagged union; the ids sit in
+      per-side columns, so each side keeps its id type);
+    - the non-null ids are unique per side.
+    NULL-id rows are returned: whether they are dropped or decline the
+    driver path is the caller's rule."""
+    for df, id_col in sides:
+        t = df.schema[id_col].dataType
+        if not (isinstance(t, T.IntegralType) or t == T.StringType()):
+            return None
+    tagged = [
+        df.select(F.lit(i).alias("_side"), F.col(id_col).alias(f"_id{i}"), *columns)
+        for i, (df, id_col) in enumerate(sides)
+    ]
+    names = tagged[0].columns[2:]
+    rows = small_rows(
+        reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged), max_rows
+    )
+    if rows is None:
+        return None
+    out: list[list[tuple]] = [[] for _ in sides]
+    seen: list[set] = [set() for _ in sides]
+    for r in rows:
+        i = r["_side"]
+        ident = r[f"_id{i}"]
+        if ident is not None:
+            if ident in seen[i]:
+                return None
+            seen[i].add(ident)
+        out[i].append((ident, *(r[n] for n in names)))
+    return out
 
 
 def build_spark(

@@ -84,10 +84,15 @@ class CSVSource:
         when `remove_malformed`, a cached frame whose dropped count is
         available via `malformed_count`.
         """
+        # escape = quote on both paths: a doubled quote char inside a
+        # quoted field is one literal quote char and a backslash is an
+        # ordinary char, as in COPY ... (FORMAT CSV), whose ESCAPE
+        # defaults to QUOTE, and in _first_fields' csv.reader
         if self.remove_expression is None and not self.remove_malformed:
             return (
                 spark.read.option("sep", self.delimiter)
                 .option("quote", self.quote)
+                .option("escape", self.quote)
                 .option("header", str(self.header).lower())
                 .option("encoding", self.encoding)
                 .option("inferSchema", "false")
@@ -130,6 +135,7 @@ class CSVSource:
         opts = {
             "sep": self.delimiter,
             "quote": self.quote,
+            "escape": self.quote,
             "mode": "PERMISSIVE",
             "columnNameOfCorruptRecord": self._corrupt_col,
         }
