@@ -4,6 +4,8 @@
 - bench.py's query lists must name catalog queries, so renaming a
   catalog query fails here instead of in the middle of a bench run;
 - `session.small_rows` is the engine's only bounded-collect size gate;
+- the MinHash and fuzzy operators build frames from Python rows only
+  through `session.local_frame`;
 - the persisted band index's layout lives only in `operators/dedup_ops.py`.
 """
 
@@ -49,6 +51,21 @@ def test_small_rows_is_the_only_bounded_collect():
         if probe.search(line)
     ]
     assert not hits, f"bounded collects outside session.small_rows: {hits}"
+
+
+def test_driver_path_operators_build_local_frames():
+    """`createDataFrame(list)` builds a Python-RDD scan: no size
+    estimate, one job and a Python worker per read. The driver paths'
+    results and every other row-built frame in these operators go
+    through `session.local_frame` (a LocalRelation)."""
+    ops = ROOT / "voter_gateway_spark" / "operators"
+    hits = [
+        f"{p.relative_to(ROOT)}:{n}"
+        for p in (ops / "dedup_ops.py", ops / "fuzzy.py")
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not hits, f"createDataFrame outside session.local_frame: {hits}"
 
 
 def test_band_index_layout_lives_in_dedup_ops():

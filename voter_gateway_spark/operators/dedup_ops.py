@@ -40,6 +40,8 @@ from voter_gateway_spark.session import (
     ckpt,
     ckpt_defer,
     ckpt_lazy,
+    local_frame,
+    python_ordered,
     small_rows,
     small_sides,
 )
@@ -459,19 +461,21 @@ DRIVER_MAX_EDGES = 100_000
 # its one collect holds at most MINHASH_DRIVER_MAX_ROWS rows, both sides
 # together, and every shingle-hash set has at most MINHASH_DRIVER_MAX_SET
 # elements (an n-word text has n - 2). Its cost grows with the hashes
-# collected, which one task computes. On a 4-core x86 host, local[4]: at
-# both caps (2,000 rows of 100 hashes) it took 0.63-0.66 s wall and
-# 0.64-0.96 CPU s against 0.47-0.70 s and 0.75-1.82 CPU s distributed,
-# with a 30 MB Python peak; 2,000 rows of 200 hashes took 1.00 s against
-# 0.58 s, and 3,000 rows of 54-word documents 0.56 s against 0.46 s, so
-# the caps stop where the two paths meet. A 50-document probe of 550
-# documents takes 0.28 s and 0.37 CPU s against 0.71 s and 1.45 CPU s.
-# Over the row cap the declined collect adds ~0.35 s wall and ~0.4 CPU s
-# to the distributed path (5,000 documents: 0.86 s against 0.53 s).
-# MINHASH_DRIVER_MAX_FANOUT bounds the band-bucket fanout, so the
-# driver's verification work and the rows it hands back: near the cap
-# (fanout 198,104, 92,632 rows out) the driver path took 0.77 s and
-# 0.93 CPU s against 2.11 s and 2.79 CPU s, with a 19 MB Python peak.
+# collected, which one task computes. On a 4-core x86 host, local[4],
+# medians of 5 warm runs, each result written to the noop sink, CPU of
+# the driver JVM, the driver's Python and its Python workers: at both caps (2,000 rows of 100
+# hashes) it took 0.43 s wall and 0.76 CPU s against 0.61 s and 1.50
+# CPU s distributed, with a 30 MB Python peak; 2,000 rows of 200 hashes
+# took 0.95 s against 0.59 s, and 3,000 rows of 54-word documents 0.61 s
+# against 0.44 s, so the caps stay where the distributed path takes
+# over. A 50-document probe of 550 documents takes 0.14 s and 0.24 CPU s
+# against 0.54 s and 0.98 CPU s. Over the row cap the declined collect
+# adds ~0.1 s wall and ~0.13 CPU s to the distributed path (5,000
+# documents: 0.68 s against 0.58 s). MINHASH_DRIVER_MAX_FANOUT bounds
+# the band-bucket fanout, so the driver's verification work and the
+# rows it hands back: near the cap (fanout 175,208, 74,065 rows out) the
+# driver path took 0.72 s and 1.09 CPU s against 3.20 s and 4.58 CPU s,
+# with a 22 MB Python peak.
 MINHASH_DRIVER_MAX_ROWS = 2_000
 MINHASH_DRIVER_MAX_SET = 100
 MINHASH_DRIVER_MAX_FANOUT = 200_000
@@ -742,7 +746,10 @@ def _driver_minhash_counts(
 
     `session.small_sides` collects (id, shingle_hash_set) of all sides
     in one bounded job. Spark computes the hash sets, so the driver
-    re-implements no tokenizing or md5. The driver path runs only when
+    re-implements no tokenizing or md5; each side projects its set as
+    a column first and the size gate reads that column, so the md5
+    pass runs once per row (CollapseProject keeps the multi-referenced
+    alias staged, as in minhash_signature). The driver path runs only when
     all of these hold; otherwise the caller runs the distributed plan
     and the collect is the only waste:
     - small_sides' gate: at most MINHASH_DRIVER_MAX_ROWS rows together,
@@ -760,13 +767,14 @@ def _driver_minhash_counts(
 
     NULL ids are dropped, as _collapse_exact drops them; the pairing
     is _minhash_count_rows. Returns a (names[0], names[1], _inter,
-    _union) createDataFrame frame; the caller rounds and thresholds it
-    in Spark (_jaccard_from_counts), because Spark's double round and
-    Python's differ on half-way cases."""
-    hh = shingle_hash_set(text_col, k)
+    _union) `session.local_frame`, which the default broadcast
+    threshold broadcasts into any join; the caller rounds and
+    thresholds it in Spark (_jaccard_from_counts), because Spark's
+    double round and Python's differ on half-way cases."""
+    staged = [s.select(id_col, shingle_hash_set(text_col, k).alias("_h")) for s in sides]
     collected = small_sides(
-        [(s, id_col) for s in sides],
-        [F.when(F.size(hh) <= MINHASH_DRIVER_MAX_SET, hh).alias("_hh")],
+        [(s, id_col) for s in staged],
+        [F.when(F.size("_h") <= MINHASH_DRIVER_MAX_SET, F.col("_h")).alias("_hh")],
         MINHASH_DRIVER_MAX_ROWS,
     )
     if collected is None:
@@ -790,7 +798,7 @@ def _driver_minhash_counts(
             T.StructField("_union", T.IntegerType()),
         ]
     )
-    return sides[0].sparkSession.createDataFrame(out, schema)
+    return local_frame(sides[0].sparkSession, out, schema)
 
 
 def _jaccard_from_counts(
@@ -805,10 +813,7 @@ def _jaccard_from_counts(
     keep = jac >= threshold
     if keep_identical:
         keep = keep | (F.col("_inter") == F.col("_union"))
-    # at most MINHASH_DRIVER_MAX_FANOUT rows plus one per collected row,
-    # but a createDataFrame frame has no size estimate: without the hint
-    # a join against it shuffles
-    return F.broadcast(counts.where(keep).select(a, b, jac.alias("jaccard")))
+    return counts.where(keep).select(a, b, jac.alias("jaccard"))
 
 
 def incremental_minhash_pairs(
@@ -1005,7 +1010,7 @@ def _edge_id_type(edges: DataFrame, a: str, b: str):
 
 def _id_frame(spark, rows: list, names: tuple[str, str], id_type) -> DataFrame:
     schema = T.StructType([T.StructField(n, id_type, True) for n in names])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _driver_components(edges: DataFrame, rows: list) -> DataFrame:
@@ -1043,14 +1048,17 @@ def connected_components(
     tables. A 1000-link chain converges in ~11 rounds; near-dup graphs
     (diameter ≪ 10) still converge in 2–3.
 
-    Two paths, identical output. When `session.small_rows` returns the
-    directed edge list (at most `driver_max_edges`, default
-    DRIVER_MAX_EDGES), driver-side union-find labels it (union-by-min
-    roots, so find(x) IS the component min) and the labels come back
-    as one createDataFrame; otherwise the pointer-jumping rounds run.
-    The edges are a lazy checkpoint, so the gate's action materializes
-    them for the rounds. Set driver_max_edges=0 to force the
-    distributed path.
+    Two paths, identical output. When the ids are `session.
+    python_ordered` (integral or default-collation string) and
+    `session.small_rows` returns the directed edge list (at most
+    `driver_max_edges`, default DRIVER_MAX_EDGES), driver-side
+    union-find labels it (union-by-min roots, so find(x) IS the
+    component min) and the labels come back as one `session.
+    local_frame`; otherwise the pointer-jumping rounds run. Python's
+    `<` and `==` on other id types are not Spark's (under UTF8_LCASE,
+    'a' < 'B' and 'b' == 'B'), so they never reach the driver. The edges are a lazy checkpoint, so the gate's action
+    materializes them for the rounds. Set driver_max_edges=0 to force
+    the distributed path.
 
     Raises RuntimeError if labels are still changing after `max_iter`
     rounds — silently returning non-converged labels would let
@@ -1061,7 +1069,7 @@ def connected_components(
         driver_max_edges = DRIVER_MAX_EDGES
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).transform(ckpt_lazy)
-    rows = small_rows(edges, driver_max_edges)
+    rows = small_rows(edges, driver_max_edges if python_ordered(edges.schema["a"].dataType) else 0)
     if rows is not None:
         return _driver_components(edges, rows)
     labels = (
@@ -1152,14 +1160,16 @@ def incremental_component_assign(
 
     DRIVER RELABEL: the day's edges (batch→corpus-label and
     batch-internal, tagged) are collected ONCE by `session.small_rows`
-    under connected_components' size gate (DRIVER_MAX_EDGES directed
-    edges). When the whole list fits, union-find on the driver yields
-    the labels, the relabel table (touched labels whose component
-    changed) and the batch labels, and the map is built as cluster_map
-    ⋈ broadcast(relabel) ∪ batch_ids ⋈ broadcast(labels) — no iterative
-    rounds and no component frame to join back, which is most of a
-    small day's jobs. Above the gate the edges go to the distributed
-    components path, with no second size probe."""
+    under connected_components' gate (`session.python_ordered` ids,
+    DRIVER_MAX_EDGES directed edges). When the whole list fits,
+    union-find on the driver yields the labels, the relabel table
+    (touched labels whose component changed) and the batch labels as
+    two `session.local_frame`s, and the map is built as cluster_map ⋈
+    relabel ∪ batch_ids ⋈ labels — no iterative rounds and no component
+    frame to join back, which is most of a small day's jobs. The two
+    frames carry exact size estimates, so both joins broadcast them
+    under the default threshold. Above the gate the edges go to the
+    distributed components path, with no second size probe."""
     bid = batch_ids.select(F.col(batch_ids.columns[0]).alias("id")).distinct()
     cm = cluster_map.select(
         F.col(cluster_map.columns[0]).alias("_cid"),
@@ -1180,24 +1190,17 @@ def incremental_component_assign(
         F.lit(False).alias("_bc"),
     )
     edges = bc.unionByName(nn)
+    id_type = _edge_id_type(edges, "id_a", "id_b")
     # the gate counts directed edges, two per collected row
-    rows = small_rows(edges, DRIVER_MAX_EDGES // 2)
+    rows = small_rows(edges, DRIVER_MAX_EDGES // 2 if python_ordered(id_type) else 0)
     if rows is not None:
         root = _union_find((r["id_a"], r["id_b"]) for r in rows)
         touched = {r["id_b"] for r in rows if r["_bc"] and r["id_b"] is not None}
-        id_type = _edge_id_type(edges, "id_a", "id_b")
         spark = edges.sparkSession
-        relabel = F.broadcast(
-            _id_frame(
-                spark,
-                [(t, root[t]) for t in touched if root[t] != t],
-                ("_old", "_new"),
-                id_type,
-            )
+        relabel = _id_frame(
+            spark, [(t, root[t]) for t in touched if root[t] != t], ("_old", "_new"), id_type
         )
-        labels = F.broadcast(
-            _id_frame(spark, list(root.items()), ("id", "component"), id_type)
-        )
+        labels = _id_frame(spark, list(root.items()), ("id", "component"), id_type)
     else:
         # checkpointed for the components rounds and the touched-label
         # scan below; driver_max_edges=0 skips a second size probe
@@ -1540,10 +1543,12 @@ def build_band_index(
         minhash_hashed_sigs(corpus_df, id_col, text_col, k, n_hashes),
         f"{path}/bands", f"{path}/hashes", "overwrite", prefix_len, n_hashes, bands,
     )
-    corpus_df.sparkSession.createDataFrame(
-        [(k, n_hashes, bands, prefix_len)],
-        "k int, n_hashes int, bands int, prefix_len int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    meta = T.StructType(
+        [T.StructField(n, T.IntegerType()) for n in ("k", "n_hashes", "bands", "prefix_len")]
+    )
+    local_frame(corpus_df.sparkSession, [(k, n_hashes, bands, prefix_len)], meta).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/meta")
 
 
 def probe_band_index(

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from voter_gateway_spark.operators.skew import widen
-from voter_gateway_spark.session import ckpt, ckpt_lazy, small_sides
+from voter_gateway_spark.session import ckpt, ckpt_lazy, local_frame, small_sides
 
 DEFAULT_THRESHOLD = 0.5  # fuzzy_merger.rb:5
 
@@ -662,7 +662,12 @@ def _driver_claims(
     sets under 500 elements every qualifying union is ≤ 997, so two
     distinct ratios differ by ≥ 1/997² > 1e-6 and round apart, while
     equal ratios are equal doubles (IEEE division is correctly
-    rounded). The output goes through the same F.round(…, 6)."""
+    rounded). The output goes through the same F.round(…, 6).
+
+    The claims come back as one `session.local_frame` (at most
+    DRIVER_MAX_ROWS / 2 rows): its exact size estimate lets the
+    default broadcast threshold broadcast it into the caller's joins,
+    and reading it runs no job."""
     sets = [trigrams(c).alias(f"_g{i}") for i, c in enumerate(columns)]
     sides = small_sides([(unmatched, source_id), (pool, target_id)], sets, DRIVER_MAX_ROWS)
     if sides is None:
@@ -719,12 +724,8 @@ def _driver_claims(
             T.StructField("_fuzzy_column", T.StringType()),
         ]
     )
-    # at most DRIVER_MAX_ROWS / 2 rows, but a createDataFrame frame has
-    # no size estimate: without the hint a join against it shuffles
-    return F.broadcast(
-        unmatched.sparkSession.createDataFrame(claims, schema).withColumn(
-            "similarity", F.round("similarity", 6)
-        )
+    return local_frame(unmatched.sparkSession, claims, schema).withColumn(
+        "similarity", F.round("similarity", 6)
     )
 
 

@@ -193,6 +193,16 @@ def small_rows(df: DataFrame, max_rows: int) -> list[Row] | None:
     return rows if len(rows) <= max_rows else None
 
 
+def python_ordered(t: T.DataType) -> bool:
+    """Whether Python's order and equality on the collected values of
+    type ``t`` are Spark's: integral types and default-collation
+    strings (code point order is UTF-8 byte order). Every driver path
+    that compares ids in Python (union-find, dedup by id, min id) runs
+    only on these; a collated string (``UTF8_LCASE``) or a double id
+    (NaN, -0.0) takes the distributed plan."""
+    return isinstance(t, T.IntegralType) or t == T.StringType()
+
+
 def small_sides(
     sides: list[tuple[DataFrame, str]], columns: list[Column], max_rows: int
 ) -> list[list[tuple]] | None:
@@ -201,18 +211,16 @@ def small_sides(
     theirs to finish. ``sides`` holds ``(frame, id column)``; every
     aliased Column in ``columns`` is projected on every side. None
     unless all of these hold:
-    - each id column is integral or a default-collation string, whose
-      order and equality Python shares (checked before any job);
+    - each id column's type is :func:`python_ordered` (checked before
+      any job);
     - all sides together have at most ``max_rows`` rows (one
       ``small_rows`` job over a side-tagged union; the ids sit in
       per-side columns, so each side keeps its id type);
     - the non-null ids are unique per side.
     NULL-id rows are returned: whether they are dropped or decline the
     driver path is the caller's rule."""
-    for df, id_col in sides:
-        t = df.schema[id_col].dataType
-        if not (isinstance(t, T.IntegralType) or t == T.StringType()):
-            return None
+    if not all(python_ordered(df.schema[id_col].dataType) for df, id_col in sides):
+        return None
     tagged = [
         df.select(F.lit(i).alias("_side"), F.col(id_col).alias(f"_id{i}"), *columns)
         for i, (df, id_col) in enumerate(sides)
@@ -234,6 +242,25 @@ def small_sides(
             seen[i].add(ident)
         out[i].append((ident, *(r[n] for n in names)))
     return out
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order) as a frame the
+    plan holds itself: one ``pyarrow.Table`` typed by ``schema``, which
+    ``createDataFrame`` turns into a ``LocalRelation``. Such a frame
+    has an exact size estimate, so the broadcast threshold applies to
+    it without a hint; reading it runs no job and starts no Python
+    worker. ``createDataFrame(list)`` instead builds a Python RDD: a
+    ``Long.MaxValue`` size estimate, and every read runs a scan job
+    through ``pyspark.daemon``. Meant for the driver paths' results,
+    which are far under ``spark.sql.execution.arrow.localRelationThreshold``.
+    Does not need ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
 
 
 def build_spark(
