@@ -1,4 +1,5 @@
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -187,3 +188,30 @@ def spark_prop(spark):
     """Alias fixture for hypothesis tests (function-scoped @given bodies
     reuse the session-scoped SparkSession)."""
     return spark
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """The one Spark job counter of the suite: `with count_jobs() as n:`
+    counts the jobs started inside the block on any thread (AQE and
+    broadcast jobs included), in the one-element list `n`, filled in at
+    block exit. Job ids are global and increase by one per job, so the
+    count is the newest id at exit minus the newest id at entry, each
+    read once the listener bus has drained."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        jsc.listenerBus().waitUntilEmpty(10000)
+        jobs = jsc.statusStore().jobsList(None)  # newest first
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+    @contextmanager
+    def count():
+        box = [None]
+        first = last_job_id()
+        try:
+            yield box
+        finally:
+            box[0] = last_job_id() - first
+
+    return count

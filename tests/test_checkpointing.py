@@ -12,7 +12,6 @@ one job per local ckpt_defer/ckpt_parallel batch, and one job per frame
 on the reliable path.
 """
 
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -63,27 +62,6 @@ def test_flag_off_by_default(monkeypatch):
     assert reliable_checkpoint_dir() is None
 
 
-def _last_job_id(spark):
-    """Id of the newest Spark job once the listener bus has drained. Job
-    ids are global and increase by one per job, whatever thread runs it."""
-    jsc = spark.sparkContext._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty(10000)
-    jobs = jsc.statusStore().jobsList(None)  # newest first
-    return jobs.head().jobId() if jobs.nonEmpty() else -1
-
-
-@contextmanager
-def _jobs(spark):
-    """Count the Spark jobs started inside the block, on any thread.
-    Yields a one-element list filled in at block exit."""
-    box = [None]
-    first = _last_job_id(spark)
-    try:
-        yield box
-    finally:
-        box[0] = _last_job_id(spark) - first
-
-
 def _frames(spark, n):
     """n shuffle-free frames: a lazy mark runs no job for them, so every
     counted job is a materialization."""
@@ -101,21 +79,21 @@ def _want(n):
     return [(i + 2) * sum(range(10 * (i + 1))) for i in range(n)]
 
 
-def test_local_path_job_counts(spark, monkeypatch):
+def test_local_path_job_counts(spark, count_jobs, monkeypatch):
     """One job per eager ckpt, and one job per batch for any N >= 1."""
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
-    with _jobs(spark) as n:
+    with count_jobs() as n:
         eager = ckpt(_frames(spark, 1)[0])
     assert n[0] == 1
 
     for size in (1, 3):
-        with _jobs(spark) as n:
+        with count_jobs() as n:
             with ckpt_defer():
                 out = [ckpt(f) for f in _frames(spark, size)]
         assert n[0] == 1, size
         assert _sums(out) == _want(size)
 
-    with _jobs(spark) as n:
+    with count_jobs() as n:
         out = ckpt_parallel(_frames(spark, 3))
     assert n[0] == 1
     assert _sums(out) == _want(3)
@@ -123,10 +101,10 @@ def test_local_path_job_counts(spark, monkeypatch):
     # inside an open batch ckpt_parallel and a nested ckpt_defer join
     # it: neither runs a job of its own, the outer exit runs one
     first, *rest = _frames(spark, 3)
-    with _jobs(spark) as outer:
+    with count_jobs() as outer:
         with ckpt_defer():
             a = ckpt(first)
-            with _jobs(spark) as inner:
+            with count_jobs() as inner:
                 b = ckpt_parallel(rest[:1])
                 with ckpt_defer():
                     c = ckpt(rest[1])
@@ -136,7 +114,7 @@ def test_local_path_job_counts(spark, monkeypatch):
     assert _sums([eager]) == _want(1)
 
 
-def test_reliable_path_job_counts_and_files(spark, tmp_path, monkeypatch):
+def test_reliable_path_job_counts_and_files(spark, count_jobs, tmp_path, monkeypatch):
     """Reliable path: never batched, one compute-and-write job per frame,
     files in the checkpoint directory."""
     sc = spark.sparkContext
@@ -154,7 +132,7 @@ def test_reliable_path_job_counts_and_files(spark, tmp_path, monkeypatch):
 
     for batch in (deferred, ckpt_parallel):
         before = rdd_dirs()
-        with _jobs(spark) as n:
+        with count_jobs() as n:
             out = batch(_frames(spark, 3))
         assert n[0] == 3, batch
         new = rdd_dirs() - before
@@ -168,7 +146,7 @@ def test_reliable_path_job_counts_and_files(spark, tmp_path, monkeypatch):
     assert root == installed or root.removeprefix("file:").startswith(str(ckpt_dir))
 
 
-def test_failing_batch_runs_one_job_and_closes_the_batch(spark, monkeypatch):
+def test_failing_batch_runs_one_job_and_closes_the_batch(spark, count_jobs, monkeypatch):
     """A task failure at batch exit surfaces after the one failed job (no
     per-frame re-run), and the batch is closed afterwards. The failure
     is a Java exception PySpark does not convert, so it reaches Python
@@ -183,7 +161,7 @@ def test_failing_batch_runs_one_job_and_closes_the_batch(spark, monkeypatch):
             "if(id = 7, 'ckpt-boom', cast(id AS string)))"
         ),
     )
-    with _jobs(spark) as n:
+    with count_jobs() as n:
         with pytest.raises(Exception, match="ckpt-boom"):
             with ckpt_defer():
                 ckpt(good_a)
@@ -191,7 +169,7 @@ def test_failing_batch_runs_one_job_and_closes_the_batch(spark, monkeypatch):
                 ckpt(good_b)
     assert n[0] == 1
 
-    with _jobs(spark) as n:
+    with count_jobs() as n:
         ckpt(_frames(spark, 1)[0])
     assert n[0] == 1
 

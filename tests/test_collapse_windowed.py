@@ -203,14 +203,8 @@ def test_ckpt_parallel_identity(spark):
     ]
 
 
-def test_ckpt_defer_batches_and_preserves_results(spark):
-    sc = spark.sparkContext
-
-    def njobs():
-        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
-
-    j0 = njobs()
-    with ckpt_defer():
+def test_ckpt_defer_batches_and_preserves_results(spark, count_jobs):
+    with count_jobs() as n, ckpt_defer():
         ca = ckpt(spark.range(0, 40).withColumn("x", F.col("id") * 3))
         cb, cc = ckpt_parallel(
             [
@@ -218,8 +212,7 @@ def test_ckpt_defer_batches_and_preserves_results(spark):
                 spark.range(0, 20).withColumn("z", F.col("id") * F.col("id")),
             ]
         )
-    j1 = njobs()
-    assert j1 - j0 == 1  # ONE union materialization job for all three
+    assert n[0] == 1  # ONE union materialization job for all three
     assert ca.agg(F.sum("x")).collect()[0][0] == 3 * sum(range(40))
     assert cb.agg(F.sum("y")).collect()[0][0] == sum(range(30)) + 7 * 30
     assert cc.agg(F.sum("z")).collect()[0][0] == sum(i * i for i in range(20))

@@ -42,17 +42,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def _jobs(spark, group, action):
-    """(action's result, jobs it ran), counted under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        return action(), len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:  # what setJobGroup set, so later jobs run ungrouped
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-
-
 @pytest.mark.parametrize("rows", [ROWS, []], ids=["rows", "empty"])
 def test_local_frame_equals_create_data_frame(spark, rows):
     got = local_frame(spark, rows, SCHEMA)
@@ -61,15 +50,18 @@ def test_local_frame_equals_create_data_frame(spark, rows):
     assert got.collect() == want.collect()
 
 
-def test_local_frame_is_a_local_relation_read_without_jobs(spark):
+def test_local_frame_is_a_local_relation_read_without_jobs(spark, count_jobs):
     df = local_frame(spark, ROWS, SCHEMA)
     plan = _plan(df)
     assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan
-    rows, jobs = _jobs(spark, "local_frame_collect", df.collect)
-    assert len(rows) == len(ROWS) and jobs == 0
+    with count_jobs() as n:
+        rows = df.collect()
+    assert len(rows) == len(ROWS) and n[0] == 0
     # the list form is a Python-RDD scan: one job per read
-    _, jobs = _jobs(spark, "list_frame_collect", spark.createDataFrame(ROWS, SCHEMA).collect)
-    assert jobs == 1
+    listed = spark.createDataFrame(ROWS, SCHEMA)
+    with count_jobs() as n:
+        listed.collect()
+    assert n[0] == 1
 
 
 def test_local_frame_needs_no_arrow_conf(spark):

@@ -244,3 +244,29 @@ def test_heavy_hitters_no_false_negatives(spark):
     df = spark.createDataFrame(rows, "v string").repartition(8)
     got = set(heavy_hitters(df, "v", support=0.2))
     assert {"hot", "warm"} <= got
+
+
+def test_audit_merge_returns_current_target_values(spark):
+    """A dry-run merge fills `return_value_to_source` columns from the
+    CURRENT target: matched rows get their target row's values (10 and
+    20, not the merged 110 and 220), unmatched rows get NULL."""
+    target = _target(spark)
+    mp = MatchPlan(_source(spark), target, target_pk="id", source_id="sid")
+    mp.find_exact_matches(["key"])
+    mp.find_exact_matches(["name"])
+    matches = mp.matches()
+    plan = (
+        MergePlan(target_pk="id")
+        .merge_column_as("bal", "$T + $S")
+        .return_value_to_source("target_bal", "$T.bal")
+        .return_value_to_source("matched_id")
+    )
+    gw = AuditGateway(spark)
+    try:
+        res = gw.merge(plan, matches, target)
+        assert res.target is target
+        assert res.source.columns == matches.columns + ["target_bal", "matched_id"]
+        got = {r.sid: (r.matched_id, r.target_bal) for r in res.source.collect()}
+    finally:
+        gw.clean_up()
+    assert got == {1: (1, 10), 2: (2, 20), 3: (None, None)}

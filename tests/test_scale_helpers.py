@@ -181,50 +181,42 @@ def test_widen_raises_narrow_inputs_only(spark):
     assert widen(wide) is wide
 
 
-def test_widen_decides_from_the_plan_without_running_jobs(spark):
+def test_widen_decides_from_the_plan_without_running_jobs(spark, count_jobs):
     """Reading the width of a post-exchange frame through its RDD runs
     the exchange stages (and the consuming action runs them again);
     widen must decide from the plan and start no job."""
     from voter_gateway_spark.operators.skew import num_partitions, widen
 
     sc = spark.sparkContext
-
-    def njobs():
-        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
-
     agg = spark.range(200).repartition(3).groupBy((F.col("id") % 7).alias("k")).count()
-    j0 = njobs()
-    widened = widen(agg)
-    union_width = num_partitions(agg.unionByName(agg))
-    assert njobs() == j0
+    with count_jobs() as n:
+        widened = widen(agg)
+        union_width = num_partitions(agg.unionByName(agg))
+    assert n[0] == 0
     assert union_width == 2 * num_partitions(agg)
     assert num_partitions(widened) >= sc.defaultParallelism
     assert sorted(widened.collect()) == sorted(agg.collect())
 
 
-def test_small_rows_is_one_bounded_job(spark):
+def test_small_rows_is_one_bounded_job(spark, count_jobs):
     """The operators' shared small-input gate: every row at the limit,
     None one row over it, one job either way on a many-partition frame,
     and no job at all for a zero limit."""
     from voter_gateway_spark.session import small_rows
 
-    sc = spark.sparkContext
     # the explode hides Range's known row count, from which the
     # optimizer would drop the limit and collect everything in one job
     df = spark.range(0, 100, 1, 8).selectExpr("explode(array(id)) AS id")
 
-    def gated(max_rows, group):
-        sc.setJobGroup(group, "small_rows gate")
-        try:
-            return small_rows(df, max_rows), len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:  # what setJobGroup set, so later jobs run ungrouped
-            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(key, None)
+    def gated(max_rows):
+        with count_jobs() as n:
+            rows = small_rows(df, max_rows)
+        return rows, n[0]
 
-    rows, jobs = gated(100, "small_rows_at_limit")
+    rows, jobs = gated(100)
     assert sorted(r.id for r in rows) == list(range(100)) and jobs == 1
-    assert gated(99, "small_rows_over_limit") == (None, 1)
-    assert gated(0, "small_rows_zero") == (None, 0)
+    assert gated(99) == (None, 1)
+    assert gated(0) == (None, 0)
 
 
 def test_codegen_cache_holds_a_warm_query_mix(spark):

@@ -208,14 +208,13 @@ class DatabaseAuditResult:
         return report
 
 
-def _coverage_dict(df: DataFrame, cols: list[str]) -> tuple[int, dict[str, tuple[int, float]]]:
-    """One aggregation pass for total + all-column coverage (the
-    reference scans once per column — N scans vs our 1)."""
-    row = df.agg(F.count(F.lit(1)).alias("_total"), *coverage_exprs(cols)).collect()[0]
+def _profile(df: DataFrame, cols: list[str], *extra) -> tuple:
+    """One aggregation pass for total + all-column coverage + `extra`
+    aggregates (the reference scans once per column — N scans vs our
+    1). Returns the aggregate row and column -> (covered, fraction)."""
+    row = df.agg(F.count(F.lit(1)).alias("_total"), *coverage_exprs(cols), *extra).collect()[0]
     total = row["_total"]
-    return total, {
-        c: (row[c], (row[c] / total) if total else 0.0) for c in cols
-    }
+    return row, {c: (row[c], (row[c] / total) if total else 0.0) for c in cols}
 
 
 def csv_audit(
@@ -224,23 +223,35 @@ def csv_audit(
     keys: list[str] | None = None,
     columns: list[str] | None = None,
 ) -> CSVAuditResult:
-    """Profile a CSV file: load with malformed-row accounting, then one
-    coverage pass + per-key uniqueness probes (csv_audit.rb:30-58
-    perform_audit). `source` is a CSVSource; a copy with
-    remove_malformed=True is used so the invalid-row count is real."""
+    """Profile a CSV file (csv_audit.rb:30-58 perform_audit). `source`
+    is a CSVSource; a copy with remove_malformed=True is read, so the
+    invalid-row count is real and the parse is cached. Past the read's
+    header sniff, two queries:
+    - one aggregate over the valid rows: total, coverage (A2) and per
+      key (A3) `countDistinct(key)` plus one group if any key is NULL,
+      which equals the total exactly when `key_is_unique` holds (its
+      GROUP BY puts all NULL keys in one group);
+    - `malformed_count()`'s union query (A7): blank lines are not in
+      the parse."""
     from dataclasses import replace
 
     src = replace(source, remove_malformed=True)
-    df = src.read(spark).cache()
-    total, coverage = _coverage_dict(df, columns or df.columns)
-    result = CSVAuditResult(
-        total_count=total,
+    df = src.read(spark)
+    keys = keys or []
+    groups = [
+        (
+            F.countDistinct(F.col(f"`{k}`"))
+            + (F.count_if(F.col(f"`{k}`").isNull()) > 0).cast("int")
+        ).alias(f"_groups{i}")
+        for i, k in enumerate(keys)
+    ]
+    row, coverage = _profile(df, columns or df.columns, *groups)
+    return CSVAuditResult(
+        total_count=row["_total"],
         malformed_count=src.malformed_count(),
+        keys={k: row[f"_groups{i}"] == row["_total"] for i, k in enumerate(keys)},
         coverage=coverage,
     )
-    for key in keys or []:
-        result.keys[key] = key_is_unique(df, key)
-    return result
 
 
 def database_audit(
@@ -251,8 +262,8 @@ def database_audit(
 ) -> DatabaseAuditResult:
     """Profile a table: count + coverage in one pass, then a top-k
     distribution per requested column (database_audit.rb:10-48)."""
-    total, coverage = _coverage_dict(df, columns or df.columns)
-    result = DatabaseAuditResult(total_records=total, coverage=coverage)
+    row, coverage = _profile(df, columns or df.columns)
+    result = DatabaseAuditResult(total_records=row["_total"], coverage=coverage)
     for col in distribution_columns or []:
         rows = value_distribution(df, col, limit=limit).collect()
         result.distributions[col] = [(r["value"], r["count"]) for r in rows]
@@ -299,14 +310,12 @@ def dedup_audit(plan) -> DedupAuditResult:
     """Dry-run a DedupPlan: per-rule duplicate counts + invariant
     violation counts, writing nothing (dedup_audit.rb:12-38).
 
-    Uses the plan's OWN match lowering (`_matches`), not the raw
+    Uses the plan's OWN match lowering (`matches()`), not the raw
     self-join cascade: for window-lowerable plans the raw form builds
     n² pairs per duplicate group — the exact hang the ×100 stress
     measured — while execute() runs the linear window form; the audit
     must cost what the execution costs."""
-    matches = (
-        plan._matches() if hasattr(plan, "_matches") else plan.match.matches()
-    ).cache()
+    matches = plan.matches().cache()
     base = merge_audit(matches)
     reflexive, symmetric = plan.invariant_counts(matches)
     return DedupAuditResult(

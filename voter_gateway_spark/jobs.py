@@ -18,6 +18,7 @@ driver object.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from voter_gateway_spark.audit import (
     DedupAuditResult,
@@ -25,6 +26,7 @@ from voter_gateway_spark.audit import (
     dedup_audit,
     merge_audit,
 )
+from voter_gateway_spark.plans.matching import TARGET_ID
 from voter_gateway_spark.plans.merging import MergePlan, MergeResult
 from voter_gateway_spark.session import GatewaySession
 
@@ -47,27 +49,11 @@ class AuditGateway(GatewaySession):
         gateways (values reflect pre-merge target state; unmatched
         rows carry NULL, as they would pre-insert)."""
         self.audit_results.append(merge_audit(matches))
-        matched = matches.where(matches["_target_id"].isNotNull())
-        unmatched = matches.where(matches["_target_id"].isNull())
-        source = matches
-        if plan.returned:
-            from pyspark.sql import functions as F
-
-            pk = plan.target_pk
-            ret_exprs = []
-            for c_src, template in plan.returned.items():
-                sql = template.replace("$T.", "").replace("$T", f"`{pk}`")
-                ret_exprs.append(F.expr(sql).alias(f"_ret_{c_src}"))
-            ret = target.select(F.col(f"`{pk}`").alias("_ret_pk"), *ret_exprs)
-            source = matches.join(
-                ret, matches["_target_id"] == F.col("_ret_pk"), "left"
-            ).drop("_ret_pk")
-            for c_src in plan.returned:
-                source = source.withColumn(c_src, F.col(f"_ret_{c_src}")).drop(
-                    f"_ret_{c_src}"
-                )
         return MergeResult(
-            target=target, source=source, matched=matched, unmatched=unmatched
+            target=target,
+            source=plan.returning(matches, target, F.col(TARGET_ID)),
+            matched=matches.where(F.col(TARGET_ID).isNotNull()),
+            unmatched=matches.where(F.col(TARGET_ID).isNull()),
         )
 
     def dedup(self, plan, check: bool = True) -> DataFrame:

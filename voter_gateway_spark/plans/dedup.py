@@ -166,7 +166,10 @@ class DedupPlan:
             )
         return ws.withColumn(TARGET_ID, expr_t).withColumn(MATCH_RULE, expr_r)
 
-    def _matches(self) -> DataFrame:
+    def matches(self) -> DataFrame:
+        """The plan's match lowering, which execute() and dedup_audit
+        share: the linear window form when the rules allow it, else the
+        self-join cascade."""
         if self._window_lowerable():
             return self._window_matches()
         return self.match.matches()
@@ -175,7 +178,7 @@ class DedupPlan:
 
     def execute(self, check: bool = True) -> DataFrame:
         """Run the dedup; returns the post-merge table state."""
-        matches = self._matches()
+        matches = self.matches()
         if check:
             # invariants run before the destructive fold (fail-fast gate);
             # cache: the invariant query and the fold both read the match state
@@ -220,13 +223,3 @@ class DedupPlan:
             else:
                 out_exprs.append(F.col(f"`{c}`").alias(c))
         return folded.select(*out_exprs)
-
-    def audit(self) -> DataFrame:
-        """Dry-run: per-rule duplicate counts (dedup_audit.rb intent)."""
-        matches = self._matches()
-        return (
-            matches.where(F.col(TARGET_ID).isNotNull())
-            .groupBy("_match_rule")
-            .agg(F.count("*").alias("duplicates"))
-            .orderBy("_match_rule")
-        )

@@ -120,6 +120,27 @@ class MergePlan:
 
     # -- lowering -------------------------------------------------------------
 
+    def returning(self, matches: DataFrame, table: DataFrame, join_key: Column) -> DataFrame:
+        """M6: `matches` with each `return_value_to_source` column set
+        from the `table` row whose pk equals `join_key`, NULL where none
+        does. No RETURNING in Spark: the values are joined back (SURVEY
+        §2.4 M6). The template is SQL over the table row: "$T.col" →
+        col; bare "$T" → the pk."""
+        if not self.returned:
+            return matches
+        pk = self.target_pk
+        ret = table.select(
+            F.col(f"`{pk}`").alias("_ret_pk"),
+            *[
+                F.expr(t.replace("$T.", "").replace("$T", f"`{pk}`")).alias(f"_ret_{c}")
+                for c, t in self.returned.items()
+            ],
+        )
+        out = matches.join(ret, join_key == ret["_ret_pk"], "left")
+        for c in self.returned:
+            out = out.withColumn(c, F.col(f"_ret_{c}"))
+        return out.drop("_ret_pk", *[f"_ret_{c}" for c in self.returned])
+
     def execute(self, matches: DataFrame, target: DataFrame) -> MergeResult:
         """`matches` = MatchPlan.matches() output: source cols +
         _source_id/_target_id/_match_rule."""
@@ -204,28 +225,13 @@ class MergePlan:
             new_target = new_target.unionByName(insert_rows)
 
         # --- RETURNING to source (M6) ---
-        # No RETURNING in Spark: compute the merged target first, then
-        # join its values back into the source (SURVEY §2.4 M6). The
-        # template is SQL over the merged target row: "$T.col" → col;
-        # bare "$T" → the target pk.
-        new_source = matches
-        if self.returned:
-            ret_exprs = []
-            for c_src, template in self.returned.items():
-                sql = template.replace("$T.", "").replace("$T", f"`{pk}`")
-                ret_exprs.append(F.expr(sql).alias(f"_ret_{c_src}"))
-            ret = new_target.select(F.col(f"`{pk}`").alias("_ret_pk"), *ret_exprs)
-            # matched rows join on _target_id; inserted rows carry the
-            # source's own pk value when the source provides it
-            # (record_merger.rb:97-107 joins RETURNING rows by pk).
-            if pk in source_cols:
-                join_key = F.coalesce(F.col(TARGET_ID), matches[pk])
-            else:
-                join_key = F.col(TARGET_ID)
-            new_source = matches.join(ret, join_key == ret["_ret_pk"], "left")
-            for c_src in self.returned:
-                new_source = new_source.withColumn(c_src, F.col(f"_ret_{c_src}"))
-            new_source = new_source.drop("_ret_pk", *[f"_ret_{c}" for c in self.returned])
+        # matched rows join on _target_id; inserted rows carry the
+        # source's own pk value when the source provides it
+        # (record_merger.rb:97-107 joins RETURNING rows by pk).
+        join_key = F.col(TARGET_ID)
+        if pk in source_cols:
+            join_key = F.coalesce(join_key, matches[pk])
+        new_source = self.returning(matches, new_target, join_key)
 
         return MergeResult(
             target=new_target, source=new_source, matched=matched, unmatched=unmatched

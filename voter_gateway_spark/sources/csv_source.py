@@ -10,11 +10,13 @@ Reference behavior reproduced (lib/voter_file/csv_driver/csv_file.rb):
   auditing (csv_file.rb:40-63; count used by csv_audit.rb:123-133)
 - all-TEXT staging schema derived from the header (csv_file.rb:154-171)
 
-Spark-first design: the file is read ONCE as a distributed text/csv
-scan; the regex strip happens as a column expression before `from_csv`
-re-parse (no second pass over the file on disk), and malformed handling
-uses PERMISSIVE mode + corrupt-record accounting so the dropped-row
-count (A7) needs no extra scan of the original.
+Spark-first design: past the one-line header sniff, the file is read
+ONCE as a distributed scan of raw lines. Spark's csv reader drops each
+file's header by position (`header=true`), the regex strip is a column
+expression before the `from_csv` re-parse (no second pass over the file
+on disk), and malformed handling uses PERMISSIVE mode + corrupt-record
+accounting, so the dropped-row count (A7) needs no extra scan of the
+parse.
 """
 
 from __future__ import annotations
@@ -41,27 +43,32 @@ class CSVSource:
     _corrupt_col: str = field(default="_corrupt_record", repr=False)
     _malformed_pair: tuple[int, int] | None = field(default=None, repr=False)
 
-    def _raw_lines(self, spark: SparkSession) -> DataFrame:
-        """Raw physical lines decoded with `encoding`, one string column
+    def _raw_lines(self, spark: SparkSession, header: bool) -> DataFrame:
+        """Raw non-blank lines decoded with `encoding`, one string column
         `value`. NOT spark.read.text: the text source is UTF-8-only and
         silently ignores the encoding option, so a Latin-1 voter file
         (the reference's stated case) would decode every non-ASCII byte
         as U+FFFD. The csv reader DOES honor encoding — read with a
         separator that cannot occur in text (SOH) and quoting disabled,
-        and each line arrives intact as one field."""
+        and each line arrives intact as one field.
+
+        `header=True` drops each file's first non-blank line by
+        position, never by value, so a data row identical to the header
+        survives. Spark logs a header-conformance WARN per file then,
+        because the one-column schema never matches the header."""
         return (
             spark.read.option("sep", "\x01")
             .option("quote", "")
-            .option("header", "false")
+            .option("header", str(header).lower())
             .option("encoding", self.encoding)
             .schema("value STRING")
             .csv(self.path)
         )
 
     def _first_fields(self, spark: SparkSession) -> list[str]:
-        """The first physical line, regex-stripped (S5) and parsed with
+        """The first non-blank line, regex-stripped (S5) and parsed with
         the csv dialect; [] for an empty file. One `limit(1)` job."""
-        first = self._raw_lines(spark).limit(1).collect()
+        first = self._raw_lines(spark, header=False).limit(1).collect()
         if not first:
             return []
         line = first[0][0]
@@ -80,9 +87,14 @@ class CSVSource:
         """Load to an all-string DataFrame (S1/S4), applying the regex
         strip (S5) and malformed-row policy (S6).
 
-        Returns a DataFrame with the header-derived string columns plus,
-        when `remove_malformed`, a cached frame whose dropped count is
-        available via `malformed_count`.
+        Returns a DataFrame with exactly the header-derived string
+        columns (`_c0.._cN` when `header=False`). With neither a regex
+        strip nor `remove_malformed` it is Spark's own csv read. Otherwise
+        the column names come from a one-line sniff (`from_csv` needs
+        them at plan time), each file's header line is dropped by the
+        reader, and every line is re-parsed with `from_csv`. With
+        `remove_malformed` the parse is cached, malformed rows are
+        dropped, and their count is available via `malformed_count`.
         """
         # escape = quote on both paths: a doubled quote char inside a
         # quoted field is one literal quote char and a backslash is an
@@ -108,26 +120,7 @@ class CSVSource:
             # the fast csv path, sizing N from the first line's fields
             cols = [f"_c{i}" for i in range(len(self._first_fields(spark)))]
         schema_ddl = ", ".join(f"`{c}` STRING" for c in cols)
-        lines = self._raw_lines(spark)
-        if self.header:
-            # drop the header POSITIONALLY (first physical line per
-            # file), never by value: a data row textually identical to
-            # the header must survive. monotonically_increasing_id
-            # follows file order (split offsets ascend with partition
-            # index); the per-file min is found with a cheap partial
-            # aggregate + broadcast anti-condition — no full-file
-            # window sort, so this holds at scale.
-            lines = lines.select(
-                "value",
-                F.input_file_name().alias("_f"),
-                F.monotonically_increasing_id().alias("_lid"),
-            )
-            firsts = lines.groupBy("_f").agg(F.min("_lid").alias("_first"))
-            lines = (
-                lines.join(F.broadcast(firsts), "_f")
-                .where(F.col("_lid") != F.col("_first"))
-                .select("value")
-            )
+        lines = self._raw_lines(spark, header=self.header)
         value = F.col("value")
         if self.remove_expression:
             value = F.regexp_replace(value, self.remove_expression, "")
@@ -169,8 +162,8 @@ class CSVSource:
             self._flagged = flagged
             self._spark = spark
             self._malformed_pair = None
-            return flagged.where(~F.col("_malformed")).drop(self._corrupt_col, "_malformed")
-        return flagged.drop("_malformed")
+            flagged = flagged.where(~F.col("_malformed"))
+        return flagged.drop(self._corrupt_col, "_malformed")
 
     def malformed_count(self) -> int:
         """A7 malformed-row count (reference: wc -l diff, csv_audit.rb:123-133).
@@ -210,7 +203,7 @@ class CSVSource:
                 )
             parts = [
                 self._spark.read.text(self.path),
-                self._raw_lines(self._spark),
+                self._raw_lines(self._spark, header=False),
                 self._flagged.where(F.col("_malformed")),
             ]
             tagged = [p.select(F.lit(i).alias("_k")) for i, p in enumerate(parts)]
