@@ -6,7 +6,9 @@
 - `session.small_rows` is the engine's only bounded-collect size gate;
 - the MinHash and fuzzy operators build frames from Python rows only
   through `session.local_frame`;
-- the persisted band index's layout lives only in `operators/dedup_ops.py`.
+- the persisted band index's layout lives only in `operators/dedup_ops.py`;
+- the vector top-k searchers rank through one window and expand
+  duplicate-collapsed members as rows, not arrays.
 """
 
 import re
@@ -83,3 +85,22 @@ def test_band_index_layout_lives_in_dedup_ops():
         if probe.search(line)
     ]
     assert not hits, f"band-index layout outside dedup_ops: {hits}"
+
+
+def test_similarity_ranks_through_one_window():
+    """Every top-k searcher in `operators/similarity.py` ranks through
+    `_rank_topk`; another `Window.partitionBy("query_id")` is a second
+    copy of the ranking window. The two query windows with other keys
+    stay: the binary Hamming pool and the graph-search beam. No `_mem`
+    member array remains: the exact-duplicate collapse brings members
+    back as rows (`_collapsed_topk`)."""
+    src = (ROOT / "voter_gateway_spark" / "operators" / "similarity.py").read_text()
+    owners, fn = [], None
+    for line in src.splitlines():
+        m = re.match(r"def (\w+)", line)
+        if m:
+            fn = m.group(1)
+        if 'Window.partitionBy("query_id")' in line:
+            owners.append(fn)
+    assert sorted(owners) == ["_rank_topk", "binary_topk", "knn_graph_search"], owners
+    assert '"_mem"' not in src

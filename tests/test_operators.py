@@ -1900,6 +1900,79 @@ def test_ivf_topk_null_element_vectors_decline_collapse(spark):
     assert canon(True) == canon(False)
 
 
+def _dup_fixture(spark, vecs, copies):
+    """Each vector `copies` times, ids g*100 + r (group g, copy r), as a
+    LocalRelation so every read skips the Python-worker scan."""
+    from pyspark.sql import types as T
+
+    from voter_gateway_spark.session import local_frame
+
+    return local_frame(
+        spark,
+        [(g * 100 + r, v) for g, v in enumerate(vecs) for r in range(copies)],
+        T.StructType([
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]),
+    )
+
+
+def test_collapsed_topk_equals_plain_default_tier(spark, tmp_path):
+    """The row-wise member expansion of the exact-dup collapse equals
+    the plain plan through ivf_topk, ivfpq_topk and query_pq_index, for
+    k=3 with and without exclude_self and for k=1. Eight copies per
+    group make the own group fill every list, so a member cut at k
+    instead of k+1 under exclude_self loses a neighbour. Rows compare
+    by repr so NaN scores would compare equal."""
+    vecs = [
+        [1.0, 0.2, 0.0, 0.3, 0.5, 0.1, 0.0, 0.4],
+        [0.9, 0.3, 0.1, 0.2, 0.4, 0.2, 0.1, 0.5],
+        [0.0, 1.0, 0.5, 0.1, 0.0, 0.3, 0.7, 0.2],
+        [0.1, 0.8, 0.6, 0.0, 0.2, 0.4, 0.6, 0.1],
+        [0.5, 0.5, 0.5, 0.5, 0.1, 0.0, 0.2, 0.9],
+        [0.3, 0.0, 0.9, 0.7, 0.6, 0.5, 0.0, 0.2],
+    ]
+    df = _dup_fixture(spark, vecs, 8)
+    qs = df.where(F.col("vec_id") % 3 == 0)
+    n_q = qs.count()
+    p = str(tmp_path / "pqidx")
+    pq = dict(m=4, ks=4, pq_iters=0, n_centroids=2, coarse_iters=0)
+    similarity.build_pq_index(df, p, **pq)
+    ops = {
+        "ivf_topk": lambda collapse, **kw: similarity.ivf_topk(
+            qs, df, n_centroids=2, n_probe=2, iters=0,
+            collapse_exact=collapse, **kw,
+        ),
+        "ivfpq_topk": lambda collapse, **kw: similarity.ivfpq_topk(
+            qs, df, n_probe=2, collapse_exact=collapse, **pq, **kw
+        ),
+        "query_pq_index": lambda collapse, **kw: similarity.query_pq_index(
+            spark, p, qs, n_probe=2, collapse_exact=collapse, **kw
+        ),
+    }
+    for name, op in ops.items():
+        for kw in (dict(k=3), dict(k=3, exclude_self=False), dict(k=1)):
+            a, b = (
+                sorted(repr(tuple(r)) for r in op(c, **kw).collect())
+                for c in (True, False)
+            )
+            assert a == b, (name, kw)
+            assert len(a) == n_q * kw["k"], (name, kw)
+
+
+def test_zero_norm_vector_raises_on_both_ivf_paths(spark):
+    """Nonzero norms are the module's precondition: a duplicated zero
+    vector raises DIVIDE_BY_ZERO under ANSI through the collapsed and
+    the plain ivf_topk alike, never a silent NaN ranking."""
+    df = _dup_fixture(spark, [[0.0, 0.0], [1.0, 0.0], [0.6, 0.8]], 4)
+    for collapse in (True, False):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            similarity.ivf_topk(
+                df, df, k=2, n_centroids=2, n_probe=2, iters=0,
+                collapse_exact=collapse,
+            ).collect()
+
+
 def test_wav_decode_real_roundtrip():
     """make_wav -> wav_decode round-trips known PCM with integer-exact
     statistics (the third real codec, first audio one)."""

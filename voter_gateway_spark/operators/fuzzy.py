@@ -337,28 +337,38 @@ def top1_fuzzy_match(
     safety channel preserves sim-1.0 recall under the cap). Pass 0 to
     disable capping everywhere.
     """
-    if not collapse_exact:
-        if max_trigram_freq is None:
-            max_trigram_freq = "auto"
-        pairs = candidate_pairs(
-            source, target, column, target_column or column, source_id, target_id,
-            max_trigram_freq=max_trigram_freq,
-        )
-        if exclude_self:
-            pairs = pairs.where(F.col("_sid") != F.col("_tid"))
-        qualified = pairs.where(F.col("similarity") > F.lit(1.0 - threshold))
+
+    def first(pairs: DataFrame) -> DataFrame:
         w = Window.partitionBy("_sid").orderBy(
             F.col("similarity").desc(), F.col("_tid").asc()
         )
         return (
-            qualified.withColumn("_rn", F.row_number().over(w))
+            pairs.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
-            .select(
-                F.col("_sid").alias(source_id),
-                F.col("_tid").alias(f"matched_{target_id}"),
-                F.round("similarity", 6).alias("similarity"),
-            )
+            .drop("_rn")
         )
+
+    def top1(pairs: DataFrame) -> DataFrame:
+        # only the literal self pair leaves under exclude_self: a
+        # different id with the same text is a legitimate 1.0 match
+        if exclude_self:
+            pairs = pairs.where(F.col("_sid") != F.col("_tid"))
+        return first(pairs.where(F.col("similarity") > F.lit(1.0 - threshold)))
+
+    def named(best: DataFrame) -> DataFrame:
+        return best.select(
+            F.col("_sid").alias(source_id),
+            F.col("_tid").alias(f"matched_{target_id}"),
+            F.round("similarity", 6).alias("similarity"),
+        )
+
+    if not collapse_exact:
+        if max_trigram_freq is None:
+            max_trigram_freq = "auto"
+        return named(top1(candidate_pairs(
+            source, target, column, target_column or column, source_id, target_id,
+            max_trigram_freq=max_trigram_freq,
+        )))
 
     s = widen(source).select(
         F.col(source_id).alias("_sid"), trigrams(column).alias("_stg")
@@ -428,22 +438,7 @@ def top1_fuzzy_match(
                 _index_fanout_estimate(s, t) > HAZARD_EST_PAIRS
             ):
                 cap = "auto"
-        pairs = _pairs_from_trigram_frames(s, t, cap)
-        if exclude_self:
-            pairs = pairs.where(F.col("_sid") != F.col("_tid"))
-        qualified = pairs.where(F.col("similarity") > F.lit(1.0 - threshold))
-        w = Window.partitionBy("_sid").orderBy(
-            F.col("similarity").desc(), F.col("_tid").asc()
-        )
-        return (
-            qualified.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(
-                F.col("_sid").alias(source_id),
-                F.col("_tid").alias(f"matched_{target_id}"),
-                F.round("similarity", 6).alias("similarity"),
-            )
-        )
+        return named(top1(_pairs_from_trigram_frames(s, t, cap)))
     s_members = s.select("_sid", s_fp.alias("_sfp"))
     # one fingerprint-ranked pass serves BOTH the rep pick (rn==1) and,
     # under exclude_self, the within-group top-2 — materialized so the
@@ -467,27 +462,15 @@ def top1_fuzzy_match(
     )
     if max_trigram_freq is None:
         max_trigram_freq = 0  # uncapped by default on the rep pool (see docstring)
-    pairs = _pairs_from_trigram_frames(
+    # a same-fingerprint rep pair with a different id stays a 1.0
+    # match; when the within-group branch below also emits it, the
+    # final window dedups (identical sim, same tid) — cheaper than
+    # attaching fingerprints to every rep pair
+    best = top1(_pairs_from_trigram_frames(
         s_reps.select("_sid", "_stg"),
         t_reps.select("_tid", "_ttg"),
         max_trigram_freq,
-    )
-    if exclude_self:
-        # the literal self pair is the only one that must leave; a
-        # same-fingerprint pair with a DIFFERENT id is a legitimate
-        # similarity-1.0 match, and when the within-group branch below
-        # also emits it the final window dedups (identical sim, same
-        # tid). Cheaper than attaching fingerprints to every rep pair.
-        pairs = pairs.where(F.col("_sid") != F.col("_tid"))
-    qualified = pairs.where(F.col("similarity") > F.lit(1.0 - threshold))
-    w = Window.partitionBy("_sid").orderBy(
-        F.col("similarity").desc(), F.col("_tid").asc()
-    )
-    best = (
-        qualified.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(F.col("_sid").alias("_rsid"), "_tid", "similarity")
-    )
+    )).withColumnRenamed("_sid", "_rsid")
     # expand to every member of the source group (identical trigram
     # sets → identical best target)
     rep_fp = s_reps.select(F.col("_sid").alias("_rsid"), "_sfp")
@@ -530,20 +513,8 @@ def top1_fuzzy_match(
             )
             .where(F.col("_tid").isNotNull())
         )
-        wf = Window.partitionBy("_sid").orderBy(
-            F.col("similarity").desc(), F.col("_tid").asc()
-        )
-        cross = (
-            cross.unionByName(within)
-            .withColumn("_rn", F.row_number().over(wf))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    return cross.select(
-        F.col("_sid").alias(source_id),
-        F.col("_tid").alias(f"matched_{target_id}"),
-        F.round("similarity", 6).alias("similarity"),
-    )
+        cross = first(cross.unionByName(within))
+    return named(cross)
 
 
 def edit_distance_pairs(

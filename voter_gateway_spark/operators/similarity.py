@@ -4,20 +4,36 @@
   JVM-side, no Python.
 - `brute_force_topk`: exact baseline — query-set × corpus join (the
   query side is broadcast), window top-k.
-- `lsh_bucketed_topk`: the scale path — deterministic random-hyperplane
-  LSH (signs of dot products with md5-derived pseudo-random planes)
-  buckets the corpus; candidates come from matching buckets only.
-  Planes are derived from md5, so results are reproducible across runs
-  and engines.
+- `lsh_bucketed_topk`: deterministic random-hyperplane LSH (signs of
+  dot products with md5-derived pseudo-random planes) buckets the
+  corpus; candidates come from matching buckets only. Planes are
+  derived from md5, so results are reproducible across runs and
+  engines.
+- `ivf_topk` / `ivfpq_topk` and the persisted IVF and PQ indexes: a
+  k-means coarse quantizer in place of the hash planes, the same
+  probe-then-score plan shape; `int8_topk` / `binary_topk` score
+  quantized codes.
+
+The searchers rank through one window, `_rank_topk`: score first,
+then neighbor id ascending (the graph search's beam keeps its own).
+The exact-duplicate collapse of the IVF and PQ searchers is
+`_collapse_gate` plus `_collapsed_topk`.
+
+Precondition: every vector has a nonzero norm. Cosine divides by the
+norms, so with Spark's default ANSI mode a zero vector raises
+DIVIDE_BY_ZERO wherever cosine is scored or a cell assigned — the
+brute-force, LSH, IVF and IVF-PQ searchers and semantic_dedup among
+them. Callers filter zero-norm rows first, as the catalog does. NaN
+elements do not raise: their cosine is NaN, which Spark orders above
+every number.
 
 At 100 TB the corpus side stays partitioned; only queries broadcast.
-An IVF variant (k-means coarse quantizer) can replace the hash planes
-without changing the query plan shape.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -50,6 +66,26 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _rank_topk(
+    sims: DataFrame,
+    score: str,
+    k: int,
+    ascending: bool = False,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one per-query ranking window of the top-k searchers:
+    `score` (descending unless `ascending`; Spark orders NaN above
+    every number), then neighbor_id ascending, ranks 1..k. Output
+    (query_id, neighbor_id, rank, *keep, score)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        sims.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", *keep, score)
+    )
 
 
 def brute_force_topk(
@@ -85,14 +121,7 @@ def brute_force_topk(
             dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _rank_topk(sims, "cos_sim", k)
 
 
 def _plane(seed: int, dim: int) -> list[float]:
@@ -155,14 +184,7 @@ def lsh_bucketed_topk(
             dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _rank_topk(sims, "cos_sim", k)
 
 
 def l2_normalize(col: Column | str) -> Column:
@@ -305,8 +327,6 @@ def _train_centroids(
     probe already summed the corpus row count pass it as `n_rows`
     (exactly c.count() — the probe sums its per-hash group counts),
     skipping the count job entirely (r15 optimization)."""
-    import math
-
     need_n = n_centroids is None or (train_per_cell is not None and iters > 0)
     if n_rows is None:
         n_rows = c.count() if need_n else None
@@ -531,72 +551,38 @@ def ivf_topk(
     candidate-scoring stage pays q_dups × c_dups; with queries drawn
     from the corpus that is d² (35M scored pairs at the 100× replica).
     When a one-job xxhash64 probe of both sides shows duplication
-    pays, the pair stage runs on unique-vector REPRESENTATIVES only
-    and members expand back IN-ROW (no extra shuffle): per query-rep,
-    the top-(k+1) candidate reps (by rounded cos desc, rep id asc)
-    carry their group's sorted member-id arrays; a flatten +
-    array_sort over (1−cos, id) structs reproduces the member-level
-    window order exactly (equal-cos groups interleave by id, NaN
-    cosines map to −inf to mirror the window's NaN-first DESC rank),
-    and each query id filters out itself before slicing k. Top-(k+1)
-    reps provably cover the member-level top-k: any member outside
-    them is preceded by ≥ k+1 group-lead ids, at most one of which is
-    the excluded self. Centroids still train on the FULL corpus —
-    seeds and Lloyd trajectories depend on member ids, so training on
-    reps would change the quantizer; assignment, probing, scoring,
-    and ranking are bit-identical to the plain plan (equality-tested
-    on replicated fixtures). The probe declines the collapse when
-    either side contains NULL vectors (their window ordering is not
-    reproduced in-row), so such inputs keep the plain plan."""
+    pays, the pair stage runs on unique-vector REPRESENTATIVES (each
+    group's min id) only, and members come back as rows
+    (`_collapsed_topk`): each query rep's top-(k+1) candidate reps
+    (top-k without exclude_self) cover the member-level top-k, taking
+    each group's k+1 smallest member ids. Centroids still train on the
+    FULL corpus — seeds and Lloyd trajectories depend on member ids,
+    so training on reps would change the quantizer; assignment,
+    probing, scoring, and ranking are bit-identical to the plain plan
+    (equality-tested on replicated fixtures). The probe declines the
+    collapse when either side contains NULL-content vectors (the
+    collapsed training's equality re-join on the vector would drop
+    them), so such inputs keep the plain plan."""
     c = widen(corpus).select(
         F.col(id_col).alias("_cid"), as_double_array(vec_col).alias("_cv")
     ).transform(ckpt)
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
     )
-    do_collapse = False
-    c_mult = None
-    if collapse_exact:
-        # a NULL vector OR a null ELEMENT inside one declines the
-        # collapse: their cos_sim is NULL, and the plain window orders
-        # NULLs last while the in-row struct sort would order a NULL
-        # distance field first — the one ordering the expansion can't
-        # reproduce
-        probe = _fanout_probe(
-            c.select(F.lit("c").alias("_side"), F.xxhash64("_cv").alias("_h"),
-                     _null_vec_flag("_cv").alias("_nul"))
-            .unionByName(
-                q.select(F.lit("q").alias("_side"), F.xxhash64("_qv").alias("_h"),
-                         _null_vec_flag("_qv").alias("_nul"))
-            )
-        )
-        c_mult, c_nulls, c_rows = probe.get("c", (1.0, 0, None))
-        q_mult, q_nulls, _ = probe.get("q", (1.0, 0, None))
-        do_collapse = (
-            c_nulls + q_nulls == 0
-            and c_mult * q_mult > SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD
-        )
-        if c_nulls + q_nulls != 0:
-            c_mult = None  # keep training on the plain path too
-    else:
-        c_rows = None
+    do_collapse, c_mult, c_rows = (
+        _collapse_gate([(c, "_cv"), (q, "_qv")])
+        if collapse_exact
+        else (False, None, None)
+    )
     n_centroids, centroids = _train_centroids(
         c, n_centroids, iters, centroid_round, train_per_cell, dup_mult=c_mult,
         n_rows=c_rows,
     )
-
     if do_collapse:
-        cgrp = (
-            c.groupBy("_cv")
-            .agg(
-                F.min("_cid").alias("_rep"),
-                F.array_sort(F.collect_list("_cid")).alias("_mem"),
-            )
-            .transform(ckpt_lazy)
-        )
-        creps = cgrp.select(F.col("_rep").alias("_cid"), "_cv")
-        qgrp = q.groupBy("_qv").agg(F.min("query_id").alias("_qrep"))
-        qreps = qgrp.select(F.col("_qrep").alias("query_id"), "_qv")
+        cgrp = _dup_groups(c, "_cid", "_cv")
+        qgrp = _dup_groups(q, "query_id", "_qv")
+        creps = cgrp.where(F.col("_r") == 1).select("_cid", "_cv")
+        qreps = qgrp.where(F.col("_r") == 1).select("query_id", "_qv")
     else:
         creps, qreps = c, q
 
@@ -624,68 +610,9 @@ def ivf_topk(
             dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
     if not do_collapse:
-        return (
-            sims.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos_sim")
-        )
-    # rep-level top-(k[+1]) (tiny: reps only), then in-row expansion
-    rep_k = k + 1 if exclude_self else k
-    rep_top = (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rep_k)
-        .join(
-            cgrp.select(F.col("_rep").alias("neighbor_id"), "_mem"),
-            "neighbor_id",
-        )
-    )
-    # per query-rep: one sorted array of (1−cos | −inf on NaN, id, cos)
-    # member structs — array_sort's field-by-field order IS the plain
-    # window's (cos DESC with NaN first, id ASC)
-    packed = rep_top.groupBy(F.col("query_id").alias("_qrep")).agg(
-        F.array_sort(
-            F.flatten(
-                F.collect_list(
-                    F.transform(
-                        "_mem",
-                        lambda m: F.struct(
-                            F.when(
-                                F.isnan(F.col("cos_sim")),
-                                F.lit(float("-inf")),
-                            )
-                            .otherwise(F.lit(1.0) - F.col("cos_sim"))
-                            .alias("d"),
-                            m.alias("id"),
-                            F.col("cos_sim").alias("cos"),
-                        ),
-                    )
-                )
-            )
-        ).alias("_sorted")
-    )
-    # USING-join on the vector (NULL vectors can't reach this path —
-    # the probe declines the collapse when any exist)
-    qmem = q.join(qgrp, "_qv").select("query_id", "_qrep")
-    arr = F.col("_sorted")
-    if exclude_self:
-        arr = F.filter(arr, lambda s: s["id"] != F.col("query_id"))
-    return (
-        qmem.join(packed, "_qrep")
-        .select(
-            "query_id",
-            F.posexplode(F.slice(arr, 1, k)).alias("_p", "_s"),
-        )
-        .select(
-            "query_id",
-            F.col("_s.id").alias("neighbor_id"),
-            (F.col("_p") + 1).alias("rank"),
-            F.col("_s.cos").alias("cos_sim"),
-        )
-    )
+        return _rank_topk(sims, "cos_sim", k)
+    return _collapsed_topk(sims, "cos_sim", k, exclude_self, qgrp, cgrp)
 
 
 def build_ivf_index(
@@ -777,14 +704,7 @@ def query_ivf_index(
             dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _rank_topk(sims, "cos_sim", k)
 
 
 def build_pq_index(
@@ -826,16 +746,7 @@ def build_pq_index(
     if dim % m != 0:
         raise ValueError(f"build_pq_index: dim {dim} not divisible by m={m}")
     sub = dim // m
-    probe = _fanout_probe(
-        c.select(F.lit("c").alias("_side"), F.xxhash64("_cv").alias("_h"),
-                 _null_vec_flag("_cv").alias("_nul"))
-    )
-    c_mult, c_nulls, c_rows = probe.get("c", (1.0, 0, None))
-    do_collapse = (
-        c_nulls == 0 and c_mult > SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD
-    )
-    if c_nulls != 0:
-        c_mult = None
+    do_collapse, c_mult, c_rows = _collapse_gate([(c, "_cv")])
     n_centroids, centroids = _train_centroids(
         c, n_centroids, coarse_iters, centroid_round, dup_mult=c_mult,
         n_rows=c_rows,
@@ -950,10 +861,11 @@ def query_pq_index(
     Query-side exact-dup collapse (the ivf/ivfpq contract): duplicate
     query vectors share cells, LUT, and every ADC distance, so the
     probe/score stages run on distinct-vector representatives and each
-    member re-derives its top-k from its rep's top-(k+1) candidate
-    list in-row (the +1 absorbs the member's own self-exclusion; the
-    index side stores per-id codes, so candidates are already
-    member-level). Declines on NULL-content query vectors."""
+    member takes its top-k from its rep's top-(k+1) candidates (top-k
+    without exclude_self; the +1 covers the member's own exclusion).
+    The index stores per-id codes, so candidates are already members
+    and only the query side expands (`_collapsed_topk`). Declines on
+    NULL-content query vectors like every other collapse."""
     meta = spark.read.parquet(f"{path}/meta").first()
     m, ks, sub = int(meta["m"]), int(meta["ks"]), int(meta["sub"])
     centroids = spark.read.parquet(f"{path}/centroids")
@@ -961,17 +873,10 @@ def query_pq_index(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("_qv")
     )
-    do_collapse = False
-    if collapse_exact:
-        probe_fan = _fanout_probe(
-            q.select(F.lit("q").alias("_side"), F.xxhash64("_qv").alias("_h"),
-                     _null_vec_flag("_qv").alias("_nul"))
-        )
-        q_mult, q_nulls, _ = probe_fan.get("q", (1.0, 0, None))
-        do_collapse = q_nulls == 0 and q_mult > SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD
+    do_collapse = collapse_exact and _collapse_gate([(q, "_qv")])[0]
     if do_collapse:
-        qgrp = q.groupBy("_qv").agg(F.min("query_id").alias("_qrep"))
-        qreps = qgrp.select(F.col("_qrep").alias("query_id"), "_qv")
+        qgrp = _dup_groups(q, "query_id", "_qv")
+        qreps = qgrp.where(F.col("_r") == 1).select("query_id", "_qv")
     else:
         qreps = q
     probes = _nearest_cells(qreps, "_qv", centroids, n_probe).select(
@@ -1029,51 +934,10 @@ def query_pq_index(
         6,
     )
     sims = cand.select("query_id", "neighbor_id", score.alias("adc_dist"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
     if not do_collapse:
-        return (
-            sims.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "adc_dist")
-        )
-    # rep-level member-id top-(k[+1]) → per query member: drop self,
-    # slice k. Candidates are already member-level ids (the index is
-    # per-id), so only the QUERY side expands; the struct sort
-    # (adc ASC, id ASC) is the plain window's order.
-    rep_k = k + 1 if exclude_self else k
-    packed = (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rep_k)
-        .groupBy(F.col("query_id").alias("_qrep"))
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("adc_dist").alias("d"),
-                        F.col("neighbor_id").alias("id"),
-                    )
-                )
-            ).alias("_sorted")
-        )
-    )
-    qmem = q.join(qgrp, "_qv").select("query_id", "_qrep")
-    arr = F.col("_sorted")
-    if exclude_self:
-        arr = F.filter(arr, lambda s: s["id"] != F.col("query_id"))
-    return (
-        qmem.join(packed, "_qrep")
-        .select(
-            "query_id",
-            F.posexplode(F.slice(arr, 1, k)).alias("_p", "_s"),
-        )
-        .select(
-            "query_id",
-            F.col("_s.id").alias("neighbor_id"),
-            (F.col("_p") + 1).alias("rank"),
-            F.col("_s.d").alias("adc_dist"),
-        )
+        return _rank_topk(sims, "adc_dist", k, ascending=True)
+    return _collapsed_topk(
+        sims, "adc_dist", k, exclude_self, qgrp, ascending=True
     )
 
 
@@ -1172,14 +1036,7 @@ def int8_topk(
             dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")), 6
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _rank_topk(sims, "cos_sim", k)
 
 
 def binary_quantize(vec: Column, dim: int) -> Column:
@@ -1294,14 +1151,7 @@ def binary_topk(
             ).alias("cos_sim"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "hamming", "cos_sim")
-    )
+    return _rank_topk(scored, "cos_sim", k, keep=("hamming",))
 
 
 def near_dup_pairs(
@@ -1403,10 +1253,10 @@ def near_dup_pairs(
     )
 
 
-# semantic_dedup / ivf_topk run their exact-duplicate collapse only
-# when the probed dup-fanout multiplier (sum(n_g²)/sum(n_g) over
-# identical-vector groups) exceeds this — below it, the collapse's
-# extra groupBy + expansion joins cost more than the pair savings.
+# the vector searchers and semantic_dedup run their exact-duplicate
+# collapse only when the probed dup-fanout multiplier (sum(n_g²)/sum(n_g)
+# over identical-vector groups) exceeds this — below it, the collapse's
+# extra grouping + expansion joins cost more than the pair savings.
 SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD = 2.0
 
 
@@ -1417,7 +1267,7 @@ def _null_vec_flag(col: str) -> Column:
     equality joins (`groupBy(_cv)` expansion, Lloyd's training
     re-join) silently drop those rows and the output/centroids would
     diverge from the plain plan, breaking the bit-identical contract
-    (ADVICE r6 #1). The flag rides the fanout probe so the decision
+    (ADVICE r6 #1). The flag rides _collapse_gate's job so the decision
     costs no extra job."""
     return (
         F.col(col).isNull()
@@ -1425,18 +1275,31 @@ def _null_vec_flag(col: str) -> Column:
     ).cast("int")
 
 
-def _fanout_probe(rows: DataFrame) -> dict[str, tuple[float, int, int]]:
-    """The ONE dup-fanout gate job shared by the vector collapses:
-    `rows` is (_side, _h, _nul) — a hash per vector plus a 0/1
-    null-content flag per side — and the result maps each side to
-    (sum(n²)/sum(n) fanout multiplier, null count, row count). One
-    aggregate, one collect; ~sixty bytes over the wire regardless of
-    corpus size. The row count rides along (sum of the group counts =
-    exactly that side's .count()) so callers that need N — the auto
-    ⌈√N⌉ cell count, the train_per_cell sample cut — skip the separate
-    count() job the r14 shape paid (r15 optimization, guide §1.2:
-    fewer passes)."""
-    out: dict[str, tuple[float, int, int]] = {}
+def _collapse_gate(
+    sides: list[tuple[DataFrame, str]],
+) -> tuple[bool, float | None, int | None]:
+    """The ONE dup-fanout gate job of the vector collapses. `sides` are
+    (frame, vector column) pairs; one aggregate over an xxhash64 and a
+    null-content flag per vector yields, per side, the fanout
+    multiplier sum(n²)/sum(n), the null count and the row count —
+    ~sixty bytes over the wire regardless of corpus size.
+
+    Returns (collapse, training multiplier, first side's row count).
+    Collapse when no side has NULL content and the product of the
+    sides' multipliers exceeds SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD. The
+    training multiplier is the first side's, for the trainers'
+    `dup_mult`, and None when any side has NULL content. The row count
+    is the sum of the group counts, exactly that side's .count() (None
+    for an empty side), so callers that need N — the auto ⌈√N⌉ cell
+    count, the train_per_cell sample cut — skip a count job."""
+    rows = None
+    for i, (df, col) in enumerate(sides):
+        part = df.select(
+            F.lit(i).alias("_side"),
+            F.xxhash64(col).alias("_h"),
+            _null_vec_flag(col).alias("_nul"),
+        )
+        rows = part if rows is None else rows.unionByName(part)
     agg = (
         rows.groupBy("_side", "_h")
         .agg(F.count(F.lit(1)).alias("_n"), F.sum("_nul").alias("_nuls"))
@@ -1448,13 +1311,75 @@ def _fanout_probe(rows: DataFrame) -> dict[str, tuple[float, int, int]]:
         )
         .collect()
     )
-    for r in agg:
-        out[r["_side"]] = (
-            float(r["_mult"] or 1.0),
-            int(r["_nulls"] or 0),
-            int(r["_rows"] or 0),
+    stats = {
+        r["_side"]: (
+            float(r["_mult"] or 1.0), int(r["_nulls"] or 0), int(r["_rows"] or 0)
         )
-    return out
+        for r in agg
+    }
+    mults, nulls, n_rows = zip(
+        *(stats.get(i, (1.0, 0, None)) for i in range(len(sides)))
+    )
+    clean = sum(nulls) == 0
+    return (
+        clean and math.prod(mults) > SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD,
+        mults[0] if clean else None,
+        n_rows[0],
+    )
+
+
+def _dup_groups(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Every row of `df` plus `_rep`, the minimum id of its
+    exact-duplicate group, and `_r`, its id rank inside the group: one
+    window pass, lazily checkpointed because the representatives
+    (`_r == 1`) and the member expansion both read it. Groups are exact
+    vector equality; the xxhash64 partition key only lets the sort
+    compare arrays on hash ties."""
+    w = Window.partitionBy(F.xxhash64(vec_col), vec_col).orderBy(id_col)
+    return df.select(
+        "*", F.min(id_col).over(w).alias("_rep"), F.row_number().over(w).alias("_r")
+    ).transform(ckpt_lazy)
+
+
+def _collapsed_topk(
+    sims: DataFrame,
+    score: str,
+    k: int,
+    exclude_self: bool,
+    q_groups: DataFrame,
+    c_groups: DataFrame | None = None,
+    ascending: bool = False,
+) -> DataFrame:
+    """Member-level top-k from representative-level scores. `sims` is
+    (query_id, neighbor_id, score) for the query reps of `q_groups` (a
+    `_dup_groups` frame keyed query_id) against candidate reps of
+    `c_groups` (keyed _cid), or against member ids already when
+    `c_groups` is None.
+
+    Cover rule: each query rep keeps its top `keep` candidates, keep =
+    k+1 under exclude_self and k otherwise; they join to each
+    candidate group's `keep` smallest ids and to every member of the
+    query's group, self pairs drop, and `_rank_topk` ranks again.
+    Exact because members of a group share every score and, on equal
+    scores, the group with the smaller rep id comes first: a member
+    outside the rep top-`keep`, or outside its group's `keep` smallest
+    ids, has `keep` members ahead of it, at most one of them the query
+    itself."""
+    keep = k + 1 if exclude_self else k
+    top = _rank_topk(sims, score, keep, ascending).drop("rank")
+    if c_groups is not None:
+        top = top.join(
+            c_groups.where(F.col("_r") <= keep).select(
+                F.col("_rep").alias("neighbor_id"), "_cid"
+            ),
+            "neighbor_id",
+        ).select("query_id", F.col("_cid").alias("neighbor_id"), score)
+    pairs = q_groups.select("query_id", "_rep").join(
+        top.withColumnRenamed("query_id", "_rep"), "_rep"
+    )
+    if exclude_self:
+        pairs = pairs.where(F.col("query_id") != F.col("neighbor_id"))
+    return _rank_topk(pairs, score, k, ascending)
 
 
 def semantic_dedup(
@@ -1509,41 +1434,30 @@ def semantic_dedup(
     answer IS the rep-level row; for every other member m the smallest
     qualifying id is min(rep_A, best cross-group keep of rep_A) — the
     cross-group best already < rep_A by the pair orientation, so
-    keep(m) = coalesce(rep-level keep, rep_A) with cos 1.0 on the
-    rep_A fallback, independent of m. Zero-norm / NaN vectors never
-    self-qualify (their cosine is NaN in the plain plan), so the
-    fallback is gated on the group's own rounded self-cosine reaching
-    the threshold. A one-job xxhash64 dup-fanout probe (the fuzzy
+    keep(m) = coalesce(rep-level keep, rep_A) with the group's own
+    rounded self-cosine on the rep_A fallback, independent of m. The
+    fallback is gated on that self-cosine reaching the threshold, the
+    same comparison the plain pair stage makes: a NaN vector's
+    self-cosine is NaN, which passes it (Spark orders NaN above every
+    number), and a zero-norm vector raises in both plans (module
+    precondition). A one-job xxhash64 dup-fanout probe (the fuzzy
     collapse gate pattern) skips all collapse stages on low-dup
     corpora, so they pay one tiny hash-aggregate and nothing else."""
     c = widen(df).select(
         F.col(id_col).alias("_cid"), as_double_array(vec_col).alias("_cv")
     ).transform(ckpt)
     groups: DataFrame | None = None
-    mult = None
-    c_rows = None
-    if collapse_exact:
-        mult, nulls, c_rows = _fanout_probe(
-            c.select(
-                F.lit("c").alias("_side"),
-                F.xxhash64("_cv").alias("_h"),
-                _null_vec_flag("_cv").alias("_nul"),
-            )
-        ).get("c", (1.0, 0, None))
-        if nulls:
-            # null vectors / null elements: both the member-expansion
-            # join on _cv and Lloyd's collapsed-training re-join use
-            # array equality, which drops such rows — keep the plain
-            # path end to end (ADVICE r6 #1)
-            mult = None
-        elif mult > SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD:
-            # exact grouping on the vector itself (not the hash — a
-            # collision must not merge distinct vectors)
-            groups = (
-                c.groupBy("_cv")
-                .agg(F.min("_cid").alias("_rep"))
-                .transform(ckpt_lazy)
-            )
+    collapse, mult, c_rows = (
+        _collapse_gate([(c, "_cv")]) if collapse_exact else (False, None, None)
+    )
+    if collapse:
+        # exact grouping on the vector itself (not the hash — a
+        # collision must not merge distinct vectors)
+        groups = (
+            c.groupBy("_cv")
+            .agg(F.min("_cid").alias("_rep"))
+            .transform(ckpt_lazy)
+        )
     pool = (
         groups.select(F.col("_rep").alias("_cid"), "_cv")
         if groups is not None
@@ -1860,39 +1774,23 @@ def ivfpq_topk(
         raise ValueError(f"ivfpq_topk: dim {dim} not divisible by m={m}")
     sub = dim // m
 
-    # exact-duplicate collapse (ivf_topk's r13 contract, extended to
-    # the PQ path in r15): a d-way duplicated corpus pays d× in every
-    # per-vector stage (coarse assignment was 97 s of the capstone's
-    # 219 s at the 100× docs replica — 500k × √N-cells cosines for
-    # 5 000 distinct vectors) and q_dups × c_dups in the ADC stage.
-    # Duplicate vectors get identical cells, codes, and ADC distances,
-    # so the pair stage runs on unique-vector representatives and
-    # members expand back in-row — bit-identical output (the ivf_topk
-    # cover proof carries: ADC ASC, id ASC in place of cos DESC).
-    # Both trainers still see the FULL corpus (seeds depend on member
-    # ids). Residual mode keeps the plain plan: its PQ input derives
-    # from per-member cell assignment, which the collapse would reshape.
-    do_collapse = False
-    c_mult = None
-    if collapse_exact and not residual:
-        probe = _fanout_probe(
-            c.select(F.lit("c").alias("_side"), F.xxhash64("_cv").alias("_h"),
-                     _null_vec_flag("_cv").alias("_nul"))
-            .unionByName(
-                q.select(F.lit("q").alias("_side"), F.xxhash64("_qv").alias("_h"),
-                         _null_vec_flag("_qv").alias("_nul"))
-            )
-        )
-        c_mult, c_nulls, c_rows = probe.get("c", (1.0, 0, None))
-        q_mult, q_nulls, _ = probe.get("q", (1.0, 0, None))
-        do_collapse = (
-            c_nulls + q_nulls == 0
-            and c_mult * q_mult > SEMDEDUP_COLLAPSE_FANOUT_THRESHOLD
-        )
-        if c_nulls + q_nulls != 0:
-            c_mult = None
-    else:
-        c_rows = None
+    # exact-duplicate collapse (ivf_topk's contract, extended to the
+    # PQ path): a d-way duplicated corpus pays d× in every per-vector
+    # stage (coarse assignment was 97 s of the capstone's 219 s at the
+    # 100× docs replica — 500k × √N-cells cosines for 5 000 distinct
+    # vectors) and q_dups × c_dups in the ADC stage. Duplicate vectors
+    # get identical cells, codes, and ADC distances, so the pair stage
+    # runs on unique-vector representatives and members come back as
+    # rows by the keep-(k+1) cover rule of _collapsed_topk (ADC ASC in
+    # place of cos DESC) — bit-identical output. Both trainers still
+    # see the FULL corpus (seeds depend on member ids). Residual mode
+    # keeps the plain plan: its PQ input derives from per-member cell
+    # assignment, which the collapse would reshape.
+    do_collapse, c_mult, c_rows = (
+        _collapse_gate([(c, "_cv"), (q, "_qv")])
+        if collapse_exact and not residual
+        else (False, None, None)
+    )
 
     # coarse quantizer: cells + probes (the ivf_topk front half)
     n_centroids, centroids = _train_centroids(
@@ -1900,17 +1798,10 @@ def ivfpq_topk(
         n_rows=c_rows,
     )
     if do_collapse:
-        cgrp = (
-            c.groupBy("_cv")
-            .agg(
-                F.min("_cid").alias("_rep"),
-                F.array_sort(F.collect_list("_cid")).alias("_mem"),
-            )
-            .transform(ckpt_lazy)
-        )
-        creps = cgrp.select(F.col("_rep").alias("_cid"), "_cv")
-        qgrp = q.groupBy("_qv").agg(F.min("query_id").alias("_qrep"))
-        qreps = qgrp.select(F.col("_qrep").alias("query_id"), "_qv")
+        cgrp = _dup_groups(c, "_cid", "_cv")
+        qgrp = _dup_groups(q, "query_id", "_qv")
+        creps = cgrp.where(F.col("_r") == 1).select("_cid", "_cv")
+        qreps = qgrp.where(F.col("_r") == 1).select("query_id", "_qv")
     else:
         creps, qreps = c, q
     cells = _nearest_cells(creps, "_cv", centroids, 1).select(
@@ -2020,58 +1911,10 @@ def ivfpq_topk(
     sims = cand.select(
         "query_id", F.col("_cid").alias("neighbor_id"), score.alias("adc_dist")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
     if not do_collapse:
-        return (
-            sims.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "adc_dist")
-        )
-    # rep-level top-(k[+1]) then in-row member expansion: the struct
-    # sort (adc ASC, id ASC) IS the plain window's order — ADC can't
-    # be NULL/NaN here (sums of rounded squared L2 over codes that
-    # exist by construction), so no NaN remap is needed
-    rep_k = k + 1 if exclude_self else k
-    rep_top = (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= rep_k)
-        .join(
-            cgrp.select(F.col("_rep").alias("neighbor_id"), "_mem"),
-            "neighbor_id",
-        )
-    )
-    packed = rep_top.groupBy(F.col("query_id").alias("_qrep")).agg(
-        F.array_sort(
-            F.flatten(
-                F.collect_list(
-                    F.transform(
-                        "_mem",
-                        lambda mem: F.struct(
-                            F.col("adc_dist").alias("d"), mem.alias("id")
-                        ),
-                    )
-                )
-            )
-        ).alias("_sorted")
-    )
-    qmem = q.join(qgrp, "_qv").select("query_id", "_qrep")
-    arr = F.col("_sorted")
-    if exclude_self:
-        arr = F.filter(arr, lambda s: s["id"] != F.col("query_id"))
-    return (
-        qmem.join(packed, "_qrep")
-        .select(
-            "query_id",
-            F.posexplode(F.slice(arr, 1, k)).alias("_p", "_s"),
-        )
-        .select(
-            "query_id",
-            F.col("_s.id").alias("neighbor_id"),
-            (F.col("_p") + 1).alias("rank"),
-            F.col("_s.d").alias("adc_dist"),
-        )
+        return _rank_topk(sims, "adc_dist", k, ascending=True)
+    return _collapsed_topk(
+        sims, "adc_dist", k, exclude_self, qgrp, cgrp, ascending=True
     )
 
 
@@ -2886,15 +2729,9 @@ def rrf_fusion(
             F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(name)),
         ).otherwise(F.lit(0.0))
         score = term if score is None else score + term
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pivoted.withColumn("rrf_score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("rrf_score", 9).alias("rrf_score"))
-    )
+    return _rank_topk(
+        pivoted.withColumn("rrf_score", score), "rrf_score", k
+    ).withColumn("rrf_score", F.round("rrf_score", 9))
 
 
 def triangle_stats(
