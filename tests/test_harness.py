@@ -8,7 +8,8 @@
   through `session.local_frame`;
 - the persisted band index's layout lives only in `operators/dedup_ops.py`;
 - the vector top-k searchers rank through one window and expand
-  duplicate-collapsed members as rows, not arrays.
+  duplicate-collapsed members as rows, not arrays;
+- the file sources never `.cache()` a parse.
 """
 
 import re
@@ -104,3 +105,18 @@ def test_similarity_ranks_through_one_window():
             owners.append(fn)
     assert sorted(owners) == ["_rank_topk", "binary_topk", "knn_graph_search"], owners
     assert '"_mem"' not in src
+
+
+def test_sources_never_cache_a_parse():
+    """Spark's cache manager hands a cached parse to every later read
+    with the same plan, also after the file was rewritten. A source
+    checkpoints its parse instead (`session.ckpt_lazy`), which belongs
+    to one read."""
+    src = ROOT / "voter_gateway_spark" / "sources"
+    hits = [
+        f"{p.relative_to(ROOT)}:{n}"
+        for p in sorted(src.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if ".cache()" in line
+    ]
+    assert not hits, f".cache() in the file sources: {hits}"

@@ -8,12 +8,17 @@ spec/import_job_base_spec.rb:23-45). These tests exercise both
 templates end-to-end on fixture-shaped frames.
 """
 
+import os
+from collections import Counter
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from voter_gateway_spark.audit import DedupAuditResult, MergeAuditResult
+from voter_gateway_spark.audit import DedupAuditResult, MergeAuditResult, csv_audit
 from voter_gateway_spark.jobs import AuditGateway, DedupJob, ImportJob
-from voter_gateway_spark.plans import DedupPlan, MatchPlan, MergePlan
+from voter_gateway_spark.plans import DedupPlan, MatchPlan, MergePlan, WorkingFrame
+from voter_gateway_spark.sources import CSVSource
 
 
 def _target(spark):
@@ -175,6 +180,196 @@ def test_audit_results_survive_cleanup(spark):
     results = ProbeJob(spark, _source(spark), _target(spark)).perform_audit()
     assert len(results) == 1
     assert gw_holder["gw"]._working == {}  # clean_up ran
+
+
+# -- prepare once: the audit pass reuses the import pass's frames ------------
+
+CSV_BODY = (
+    "sid|key|name\n"
+    "1|K1|ALPHA SMITH\n"    # exact rule 1 (key)
+    "2||BETA JONEZ\n"       # fuzzy on name
+    "3|KX|ZETA\n"           # no match
+    "4|K4\n"                # malformed: missing field
+)
+
+
+def _file_inputs(spark, tmp_path):
+    csv = tmp_path / "import.csv"
+    csv.write_text(CSV_BODY)
+    target = str(tmp_path / "target")
+    _write_target(spark, target, [(1, "K1", "ALPHA SMITH"), (2, "K2", "BETA JONES")])
+    return str(csv), target
+
+
+def _write_target(spark, path, rows):
+    spark.createDataFrame(rows, "id bigint, key string, name string").write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+class CsvImportJob(ImportJob):
+    """The benchmark cycle in small: a messy CSV matched exactly and
+    fuzzily against a parquet target; the audit pass also profiles the
+    file."""
+
+    def __init__(self, spark, csv_path, target_path):
+        super().__init__(spark)
+        self.csv_path, self.target_path = csv_path, target_path
+        self.csv_report = self.matches = None
+
+    def job(self, gw):
+        src = CSVSource(self.csv_path, delimiter="|", remove_malformed=True)
+        if isinstance(gw, AuditGateway):
+            self.csv_report = csv_audit(src, gw.spark, keys=["sid"])
+        target = gw.spark.read.parquet(self.target_path)
+        mp = MatchPlan(src.read(gw.spark), target, target_pk="id", source_id="sid")
+        mp.find_exact_matches(["key"])
+        mp.fuzzy_match_column("name")
+        self.matches = mp.matches()
+        return gw.merge(MergePlan(target_pk="id"), self.matches, target)
+
+
+def _audit(job):
+    return job.perform_audit(), job.csv_report, sorted(map(tuple, job.matches.collect()))
+
+
+def test_audit_after_perform_equals_standalone_audit(spark, tmp_path):
+    csv, target = _file_inputs(spark, tmp_path)
+    job = CsvImportJob(spark, csv, target)
+    job.perform()
+    after = _audit(job)
+    alone = _audit(CsvImportJob(spark, csv, target))
+    assert after == alone
+    results, report, _ = after
+    assert results[0].per_rule == {1: 1, 2: 1} and results[0].total == 3
+    assert (report.total_count, report.malformed_count) == (3, 1)
+
+
+@pytest.mark.parametrize("rewrite", ["csv", "target"])
+def test_audit_after_perform_sees_rewritten_inputs(spark, tmp_path, rewrite):
+    """Rewriting the CSV in place (same path, new length and mtime) or
+    the target parquet (new part files) between the two passes makes
+    the audit read the new contents."""
+    csv, target = _file_inputs(spark, tmp_path)
+    job = CsvImportJob(spark, csv, target)
+    job.perform()
+    before = _audit(CsvImportJob(spark, csv, target))
+    if rewrite == "csv":
+        with open(csv, "a") as fh:
+            fh.write("5|K2|BETA\n6|K1\n")
+        os.utime(csv, (1, 1))
+    else:
+        _write_target(
+            spark, target, [(1, "K1", "ALPHA SMITH"), (2, "K2", "BETA JONES"), (3, "KX", "Z")]
+        )
+    after = _audit(job)
+    assert after == _audit(CsvImportJob(spark, csv, target))
+    assert after != before
+    assert after[0][0].per_rule[1] == 2
+
+
+
+def test_memo_keeps_only_the_latest_run(spark, tmp_path):
+    """A Job run again on other files holds that run's frames only."""
+    csv, target = _file_inputs(spark, tmp_path)
+    other = tmp_path / "other.csv"
+    other.write_text(CSV_BODY)
+    job = CsvImportJob(spark, csv, target)
+    job.perform()
+    held = sum(map(len, job._prepared.values()))
+    job.csv_path = str(other)
+    job.perform()
+    assert sum(map(len, job._prepared.values())) == held == 3  # sniff, parse, matches
+
+def test_matches_never_served_across_fuzzy_configurations(spark, tmp_path):
+    """Inside one Job, matches() with and without the fuzzy round, or
+    at another threshold, are different frames; the same configuration
+    is handed the same frame."""
+    csv, target = _file_inputs(spark, tmp_path)
+    seen = {}
+
+    class Probe(ImportJob):
+        def job(self, gw):
+            mp = MatchPlan(
+                CSVSource(csv, delimiter="|", remove_malformed=True).read(gw.spark),
+                gw.spark.read.parquet(target),
+                target_pk="id",
+                source_id="sid",
+            )
+            mp.find_exact_matches(["key"])
+            mp.fuzzy_match_column("name")
+            seen["fuzzy"] = mp.matches()
+            fuzzy_columns, mp.fuzzy_columns = mp.fuzzy_columns, []
+            seen["exact"] = mp.matches()
+            mp.fuzzy_columns = fuzzy_columns
+            seen["again"] = mp.matches()
+            mp.fuzzy_threshold = 0.01  # a distance: nothing this close
+            seen["strict"] = mp.matches()
+
+    Probe(spark).perform()
+    got = {k: {r.sid: r._target_id for r in df.collect()} for k, df in seen.items()}
+    assert seen["again"] is seen["fuzzy"]
+    assert got["fuzzy"] == {"1": 1, "2": 2, "3": None}
+    assert got["exact"] == got["strict"] == {"1": 1, "2": None, "3": None}
+
+
+class VoterFileJob(ImportJob):
+    """The benchmark cycle's import job, staged and matched as there,
+    on its generated inputs: 300 rows and 30 malformed lines of Latin-1
+    CSV against 1,200 voters."""
+
+    def __init__(self, spark, inputs):
+        super().__init__(spark)
+        self.inputs = inputs
+
+    def job(self, gw):
+        src = CSVSource(
+            str(self.inputs / "import.csv"),
+            delimiter="|",
+            encoding="ISO-8859-1",
+            remove_malformed=True,
+        )
+        if isinstance(gw, AuditGateway):
+            csv_audit(src, gw.spark, keys=["voterid"])
+        staged = (
+            WorkingFrame(src.read(gw.spark))
+            .map_column("state_file_id", from_col="state_voter_id")
+            .map_column("county_file_id", from_col="voterid")
+            .map_column("last_name", as_expr="upper($S)")
+            .map_column("residential_address2", from_col="addr2", as_expr="upper($S)")
+        ).build()
+        target = gw.spark.read.parquet(str(self.inputs / "voters"))
+        mp = MatchPlan(staged, target, target_pk="nbec_guid")
+        mp.find_exact_matches(["state_file_id"])
+        mp.find_exact_matches(["county_file_id", "last_name"])
+        mp.fuzzy_match_column("residential_address2")
+        return gw.merge(MergePlan(target_pk="nbec_guid"), mp.matches(), target)
+
+
+def test_audit_after_perform_skips_sniff_and_cascade(spark, tmp_path, count_jobs, monkeypatch):
+    """After perform, the audit pass runs no header sniff and builds no
+    match cascade, and starts fewer than half the jobs of a standalone
+    perform_audit, on the benchmark's voter_import inputs."""
+    from perfbench.gen import gen_voter_import
+
+    gen_voter_import(7, tmp_path)
+    calls = Counter()
+    for cls, name in ((CSVSource, "_parse_first"), (MatchPlan, "cascade")):
+        def spy(self, *a, _orig=getattr(cls, name), _name=name):
+            calls[_name] += 1
+            return _orig(self, *a)
+
+        monkeypatch.setattr(cls, name, spy)
+    with count_jobs() as alone:
+        alone_results = VoterFileJob(spark, tmp_path).perform_audit()
+    job = VoterFileJob(spark, tmp_path)
+    job.perform()
+    assert calls == {"_parse_first": 2, "cascade": 2}  # one each per pass
+    with count_jobs() as after:
+        after_results = job.perform_audit()
+    assert calls == {"_parse_first": 2, "cascade": 2}
+    assert after_results == alone_results
+    assert after[0] < alone[0] / 2, (after[0], alone[0])
 
 
 # -- sketch audit variants (100 TB audit path) ---------------------------------

@@ -105,3 +105,16 @@ def test_reread_releases_previous_cache_and_counts_latest(spark, tmp_path):
     with pytest.raises(ValueError):
         src.malformed_count()
     src.release()  # idempotent
+
+
+def test_new_read_after_rewrite_parses_the_new_contents(spark, tmp_path):
+    """A read owns its parse: a new source over the same path, after
+    the file was rewritten, reads the new lines, not a parse an earlier
+    read left behind."""
+    p = tmp_path / "r.jsonl"
+    p.write_text('{"id": 1}\n{"id": 2}\n')
+    first = JSONLSource(str(p), schema="id bigint", remove_malformed=True)
+    assert (first.read(spark).count(), first.malformed_count()) == (2, 0)
+    p.write_text('{"id": 1}\n{"id": 2}\n{"id": 3}\n{bad\n')
+    second = JSONLSource(str(p), schema="id bigint", remove_malformed=True)
+    assert (second.read(spark).count(), second.malformed_count()) == (3, 1)

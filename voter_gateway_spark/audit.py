@@ -225,8 +225,11 @@ def csv_audit(
 ) -> CSVAuditResult:
     """Profile a CSV file (csv_audit.rb:30-58 perform_audit). `source`
     is a CSVSource; a copy with remove_malformed=True is read, so the
-    invalid-row count is real and the parse is cached. Past the read's
-    header sniff, two queries:
+    invalid-row count is real and both queries below read one
+    checkpointed parse. Inside a Job that already read the unchanged
+    file with the same options, the read is handed that Job's header
+    sniff and parse (`session.reuse`); otherwise it sniffs the header
+    first. Then two queries:
     - one aggregate over the valid rows: total, coverage (A2) and per
       key (A3) `countDistinct(key)` plus one group if any key is NULL,
       which equals the total exactly when `key_is_unique` holds (its

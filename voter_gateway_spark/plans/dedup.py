@@ -169,10 +169,11 @@ class DedupPlan:
     def matches(self) -> DataFrame:
         """The plan's match lowering, which execute() and dedup_audit
         share: the linear window form when the rules allow it, else the
-        self-join cascade."""
+        self-join cascade, lazy and never reused through a Job's memo
+        (execute() caches it for the invariant check and the fold)."""
         if self._window_lowerable():
             return self._window_matches()
-        return self.match.matches()
+        return self.match.cascade()
 
     # -- execution -------------------------------------------------------------
 

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from voter_gateway_spark.schema import render_expr, spark_type
-from voter_gateway_spark.session import ckpt_lazy
+from voter_gateway_spark.session import ckpt, ckpt_lazy, reuse
 
 SOURCE_ID = "_source_id"
 TARGET_ID = "_target_id"
@@ -156,7 +156,32 @@ class MatchPlan:
         Returns working source + TARGET_ID (+ MATCH_RULE 1-based rule
         index, NULL when unmatched — A6 audit column,
         merge_audit_sql.rb:38-51).
+
+        Inside a Job's open memo (`session.reuse`) this is one eagerly
+        checkpointed frame, handed back to a later call while source
+        and target are unchanged and the key below, everything else the
+        output depends on, is equal. Without an open memo, or with a
+        rule that has join tables, this is the lazy `cascade()`.
         """
+        if any(rule.join_tables for rule in self.rules):
+            return self.cascade()
+        key = (
+            "MatchPlan.matches",
+            # dataclass repr: without join tables every field is a str,
+            # a list or tuple of them, or None, so equal reprs are equal rules
+            repr(self.rules),
+            tuple(self.fuzzy_columns),
+            self.fuzzy_threshold,
+            self.target_pk,
+            self.target_pk_type,
+            self.source_id,
+            tag_rules,
+        )
+        return reuse([self.source, self.target], key, self.cascade, keep=ckpt)
+
+    def cascade(self) -> DataFrame:
+        """`matches()` as one lazy plan, never reused: the exact cascade
+        plus the fuzzy rounds."""
         ws = self.working_source()
         pk_t = spark_type(self.target_pk_type) if self.target_pk_type else None
 

@@ -13,8 +13,9 @@ import os
 import threading
 import uuid
 from contextlib import contextmanager
+from contextvars import ContextVar
 from functools import reduce
-from typing import Iterator
+from typing import Callable, Hashable, Iterator, TypeVar
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +31,12 @@ except ImportError:  # pragma: no cover
 # ``pending`` collects the lazily-marked frames of its eager ckpt()
 # calls; the batch exit materializes them all in one job.
 _DEFER = threading.local()
+
+# the prepared-frame memo open in this context (see prepared / reuse),
+# and the ids of the entries its current run built or was handed
+_MEMO: ContextVar[tuple[dict, set[int]] | None] = ContextVar("prepared_frames", default=None)
+
+_V = TypeVar("_V")
 
 
 def reliable_checkpoint_dir() -> str | None:
@@ -261,6 +268,96 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) ->
     arrow = to_arrow_schema(schema)
     cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
+@contextmanager
+def prepared(memo: dict):
+    """Open ``memo`` for every :func:`reuse` call in this context until
+    the block exits. A Job keeps one memo per instance and opens it
+    around each run of its body (``jobs.Job``), so a later run is handed
+    what an earlier one built from unchanged inputs. At exit the memo
+    keeps only the entries this run built or was handed: a Job whose
+    inputs change from run to run holds one run's frames, not all."""
+    used: set[int] = set()
+    token = _MEMO.set((memo, used))
+    try:
+        yield
+    finally:
+        _MEMO.reset(token)
+        for key, entries in list(memo.items()):
+            memo[key] = [e for e in entries if id(e) in used]
+
+
+def reuse(
+    frames: list[DataFrame],
+    key: Hashable,
+    build: Callable[[], _V],
+    keep: Callable[[_V], _V] | None = None,
+) -> _V:
+    """``build()``, or the value an earlier call in the open memo built
+    from the same inputs.
+
+    With no memo open (:func:`prepared`), or when a frame reads
+    something :func:`_file_stamps` cannot stamp, this is ``build()``.
+    Otherwise the entry under ``key`` whose frames are pairwise
+    ``sameSemantics`` with ``frames`` is handed back if every file they
+    scan still has the path, length and modification time it had when
+    the entry was built; if not, or if there is no such entry,
+    ``keep(build())`` is stored and returned. ``key`` names the call
+    site and whatever the value depends on besides the frames' plans.
+    ``keep`` materializes a frame once (e.g. :func:`ckpt`): a lazy
+    frame handed back would be recomputed by every reader."""
+    opened = _MEMO.get()
+    stamps = None if opened is None else _file_stamps(frames)
+    if stamps is None:
+        return build()
+    memo, used = opened
+    entries = memo.setdefault(key, [])
+    for i, entry in enumerate(entries):
+        old, old_stamps, value = entry
+        if all(a.sameSemantics(b) for a, b in zip(old, frames, strict=True)):
+            if old_stamps == stamps:
+                used.add(id(entry))
+                return value
+            del entries[i]  # the same plan over rewritten files
+            break
+    entry = (frames, stamps, build() if keep is None else keep(build()))
+    entries.append(entry)
+    used.add(id(entry))
+    return entry[2]
+
+
+def _file_stamps(frames: list[DataFrame]) -> frozenset | None:
+    """``(path, length, modification time)`` of every file ``frames``
+    scan, read now through Hadoop's ``FileSystem.getFileStatus``; None
+    when a frame has a leaf whose contents could change without a
+    stamp showing it, i.e. anything but a file scan, a
+    ``LocalRelation`` or a checkpoint's ``LogicalRDD``."""
+    stamps = set()
+    for df in frames:
+        jvm = df.sparkSession._jvm
+        conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LocalRelation":
+                continue
+            if kind == "LogicalRDD" and leaf.rdd().checkpointData().isDefined():
+                continue
+            if kind != "LogicalRelation":
+                return None
+            relation = leaf.relation()
+            if relation.getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+            for name in relation.location().inputFiles():
+                path = jvm.org.apache.hadoop.fs.Path(name)
+                try:
+                    status = path.getFileSystem(conf).getFileStatus(path)
+                except Py4JError:  # gone since the frame listed it
+                    return None
+                stamps.add((name, status.getLen(), status.getModificationTime()))
+    return frozenset(stamps)
 
 
 def build_spark(

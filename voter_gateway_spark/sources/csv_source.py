@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from voter_gateway_spark.session import ckpt_lazy, reuse
+
 
 @dataclass
 class CSVSource:
@@ -67,8 +69,14 @@ class CSVSource:
 
     def _first_fields(self, spark: SparkSession) -> list[str]:
         """The first non-blank line, regex-stripped (S5) and parsed with
-        the csv dialect; [] for an empty file. One `limit(1)` job."""
-        first = self._raw_lines(spark, header=False).limit(1).collect()
+        the csv dialect; [] for an empty file. One `limit(1)` job, run
+        once per Job while the file is unchanged (`session.reuse`)."""
+        lines = self._raw_lines(spark, header=False)
+        key = ("CSVSource._first_fields", self.remove_expression, self.delimiter, self.quote)
+        return reuse([lines], key, lambda: self._parse_first(lines))
+
+    def _parse_first(self, lines: DataFrame) -> list[str]:
+        first = lines.limit(1).collect()
         if not first:
             return []
         line = first[0][0]
@@ -93,8 +101,13 @@ class CSVSource:
         the column names come from a one-line sniff (`from_csv` needs
         them at plan time), each file's header line is dropped by the
         reader, and every line is re-parsed with `from_csv`. With
-        `remove_malformed` the parse is cached, malformed rows are
-        dropped, and their count is available via `malformed_count`.
+        `remove_malformed` the parse is checkpointed (lazily: inside the
+        first job that reads it), malformed rows are dropped, and their
+        count is available via `malformed_count`. The checkpoint belongs
+        to this read: a later read of a rewritten file parses the new
+        contents. Inside a Job's memo (`session.reuse`) a later read of
+        the same unchanged file with the same options is handed this
+        parse back.
         """
         # escape = quote on both paths: a doubled quote char inside a
         # quoted field is one literal quote char and a backslash is an
@@ -158,7 +171,7 @@ class CSVSource:
         )
         flagged = parsed.withColumn("_malformed", malformed).drop("_n_delims")
         if self.remove_malformed:
-            flagged = flagged.cache()
+            flagged = reuse([flagged], "CSVSource.read", lambda: ckpt_lazy(flagged))
             self._flagged = flagged
             self._spark = spark
             self._malformed_pair = None
@@ -169,9 +182,9 @@ class CSVSource:
         """A7 malformed-row count (reference: wc -l diff, csv_audit.rb:123-133).
 
         The sum of two counts, taken together by one union-and-aggregate
-        query on the first call and cached for the instance until the
+        query on the first call and kept on the instance until the
         next read():
-        - flagged rows of the cached parse (field-count or parse
+        - flagged rows of the checkpointed parse (field-count or parse
           failures);
         - blank physical lines. Spark's csv reader (used by _raw_lines
           for its encoding support) drops them before the field-count

@@ -28,6 +28,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from voter_gateway_spark.session import ckpt_lazy
+
 
 @dataclass
 class JSONLSource:
@@ -73,11 +75,11 @@ class JSONLSource:
             "_malformed", F.col(self._corrupt_col).isNotNull()
         )
         if self.remove_malformed:
-            # a re-read supersedes the previous cached parse: release it
-            # so repeated reads don't pin stale blocks in storage memory
-            # (malformed_count always reflects the LATEST read)
-            self.release()
-            flagged = flagged.cache()
+            # a checkpoint, not a cache: it belongs to this read, where a
+            # cache would also serve a later read of the same path after
+            # the file was rewritten. A re-read supersedes the previous
+            # parse (malformed_count always reflects the LATEST read)
+            flagged = ckpt_lazy(flagged)
             self._flagged = flagged
             return flagged.where(~F.col("_malformed")).drop(
                 self._corrupt_col, "_malformed"
@@ -92,8 +94,7 @@ class JSONLSource:
         return self._flagged.where(F.col("_malformed")).count()
 
     def release(self) -> None:
-        """Unpersist the cached parse backing malformed_count(). Call
-        when done auditing; safe to call repeatedly or before read()."""
-        if getattr(self, "_flagged", None) is not None:
-            self._flagged.unpersist()
-            self._flagged = None
+        """Drop the checkpointed parse backing malformed_count(); Spark's
+        cleaner frees its blocks once nothing references it. Call when
+        done auditing; safe to call repeatedly or before read()."""
+        self._flagged = None
